@@ -1659,35 +1659,37 @@ def q_semantic_dedup_routed(spark, sf_dir):
 def q_bigram_logprob(spark, sf_dir):
     """Jelinek-Mercer interpolated BIGRAM self-perplexity (1e6-scaled
     mean NLL over bigram positions) — pipeline/text.py
-    bigram_logprob_scores, the word-ORDER-sensitive fluency signal one
-    Markov order above the retired unigram row. Oracle replicates the
-    count tables, the interpolation arithmetic and the rounding."""
-    return tx.bigram_logprob_scores(_t(spark, sf_dir, "documents"))
+    ngram_logprob_scores at order 2, the word-ORDER-sensitive fluency
+    signal one Markov order above the retired unigram row. Oracle
+    replicates the count tables, the interpolation arithmetic and the
+    rounding."""
+    return tx.ngram_logprob_scores(
+        _t(spark, sf_dir, "documents"), 2
+    ).withColumnRenamed("n_ngrams", "n_bigrams")
 
 
 def q_bigram_logprob_lang(spark, sf_dir):
     """Per-LANGUAGE Jelinek-Mercer bigram self-perplexity (the CCNet
     design: one model per language, stratum keys on every count and
     join) — pipeline/text.py one-pass combined count build
-    (count-identical to lm_count_tables(strata=...), equality-pinned
-    with strata) + bigram_logprob_against(strata=("lang",)).
-    Self-scoring, so the OOV guards never fire and the oracle
-    replicates the stratified count tables and interpolation
-    exactly."""
+    (count-identical to ngram_count_tables(2, strata=...),
+    equality-pinned with strata) + ngram_logprob_against(
+    strata=("lang",)). Self-scoring, so the OOV guards never fire and
+    the oracle replicates the stratified count tables and
+    interpolation exactly."""
     docs = _t(spark, sf_dir, "documents")
     t, n_windows = tx.ngram_count_tables_combined_n(
         docs, 2, strata=("lang",)
     )
-    return tx.bigram_logprob_against(
+    return tx.ngram_logprob_against(
         docs,
-        t[0].withColumnRenamed("c", "cb"),
-        t[1],
+        t,
         strata=("lang",),
         # measured decision, free since r11 (the table build's
         # checkpoint job IS the count) — the merge-hinted safety
         # default cost this row the bench-scale broadcast win in r10
         broadcast_tables=n_windows <= tx.LM_BROADCAST_MAX_WINDOWS,
-    )
+    ).withColumnRenamed("n_ngrams", "n_bigrams")
 
 
 def q_near_dedup_quality(spark, sf_dir):
@@ -1713,21 +1715,22 @@ def q_trigram_logprob(spark, sf_dir):
     perplexity gate from the JM bigram floor): p(w3|w1 w2) =
     0.6·c(w1w2w3)/c(w1w2·) + 0.3·c(w2w3)/c(w2·) + 0.1·c(w3)/T, mean
     -ln p over trigram positions ×1e6 — pipeline/text.py
-    trigram_logprob_scores. Oracle unrolls all five count tables and
-    the same left-associative double arithmetic."""
-    return tx.trigram_logprob_scores(_t(spark, sf_dir, "documents"))
+    ngram_logprob_scores at order 3. Oracle unrolls all five count
+    tables and the same left-associative double arithmetic."""
+    return tx.ngram_logprob_scores(
+        _t(spark, sf_dir, "documents"), 3
+    ).withColumnRenamed("n_ngrams", "n_trigrams")
 
 
 def q_ngram_logprob(spark, sf_dir):
     """Order-5 interpolated-backoff LM self-scoring — the advertised
     5-gram KenLM shape of the CCNet recipe (Wenzek et al. 2020),
-    driver-checking the generic order-N scorer at an order no
-    dedicated scorer covers (VERDICT r8 Next #2; orders 2/3 are pinned
-    transitively through the bigram/trigram rows): p(w5|w1..w4) =
+    pinning the order-N scorer at its KenLM order (VERDICT r8 Next
+    #2; orders 2/3 are the bigram/trigram rows): p(w5|w1..w4) =
     0.4·c5/x5 + 0.25·c4/x4 + 0.15·c3/x3 + 0.1·c2/x2 + 0.1·c(w5)/T over
     5-gram positions, mean -ln p ×1e6 — pipeline/text.py
     ngram_logprob_scores (count tables from the one-pass KenLM-shaped
-    ngram_count_tables_combined build — A/B-measured −26 %/−41 % at
+    ngram_count_tables_combined_n build — A/B-measured −26 %/−41 % at
     sf0.1/sf1, counts equality-pinned). The oracle extends the trigram
     oracle mechanically: one (counts, folded-context) CTE pair per
     order, the same left-associative double arithmetic. Self-scoring
@@ -1821,37 +1824,27 @@ def q_lm_stream_counts(spark, sf_dir):
     shape — streaming/lm_stream.py per-batch commits + read-time fold
     (the bm25_stream_index pattern, driver-checking the maintained-
     state family's fold-equals-batch contract as an oracle row):
-    documents split into 3 micro-batches, each batch's
-    lm_count_tables committed as an immutable partition, and the
-    folded bigram table must EXACTLY equal lm_count_tables over the
-    whole corpus — which is what the SQL oracle computes directly.
+    documents split into 3 micro-batches, each batch's order-2
+    ngram_count_tables committed as an immutable partition, and the
+    folded bigram table must EXACTLY equal ngram_count_tables(2) over
+    the whole corpus — which is what the SQL oracle computes directly.
     Batch composition is irrelevant (counts are additive)."""
 
     from mod_reservoir_spark.streaming.lm_stream import (
-        read_stream_lm_counts,
-    )
-    from mod_reservoir_spark.streaming.windowed import (
-        _commit_sketch_partition,
+        _commit_ngram_counts,
+        read_stream_ngram_counts,
     )
 
     state = _LM_STREAM_CACHE.get(sf_dir)
     if state is None:
-        import os
-
         state = _scratch_dir("lm_stream_")
         docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
         for b in range(3):
             batch = docs.filter(F.col("doc_id") % 3 == b)
-            bigrams, unigrams = tx.lm_count_tables(batch)
-            _commit_sketch_partition(
-                bigrams, os.path.join(state, "bigrams"), b
-            )
-            _commit_sketch_partition(
-                unigrams, os.path.join(state, "unigrams"), b
-            )
+            _commit_ngram_counts(batch, state, b, 2)
         _LM_STREAM_CACHE[sf_dir] = state
-    bigrams, _unigrams = read_stream_lm_counts(spark, state)
-    return bigrams.select("w1", "w2", "cb")
+    bigrams, _unigrams = read_stream_ngram_counts(spark, state, 2)
+    return bigrams.select("w1", "w2", F.col("c").alias("cb"))
 
 
 def q_curate_stream(spark, sf_dir):
@@ -4868,8 +4861,8 @@ def _near_dedup_quality_oracle(num_hashes: int = 16, bands: int = 4,
 
 
 def _bigram_logprob_oracle(lam_ppm: int = 800000) -> str:
-    """bigram_logprob_scores replicated: per-doc bigram partials, the
-    corpus bigram/context/unigram count tables, the Jelinek-Mercer
+    """ngram_logprob_scores(docs, 2) replicated: per-doc bigram partials,
+    the corpus bigram/context/unigram count tables, the Jelinek-Mercer
     interpolation with the SAME left-associative double arithmetic as
     the Spark expression, and the 1e6 rounding."""
     return f"""
@@ -5009,7 +5002,7 @@ def _r7_oracles() -> dict[str, str]:
 def _trigram_logprob_oracle(
     lam3_ppm: int = 600000, lam2_ppm: int = 300000
 ) -> str:
-    """trigram_logprob_scores replicated: per-doc trigram partials,
+    """ngram_logprob_scores(docs, 3) replicated: per-doc trigram partials,
     the trigram/bigram/unigram count tables with both context rollups,
     the order-3 Jelinek-Mercer interpolated backoff with the SAME
     left-associative double arithmetic as the Spark expression, and

@@ -104,15 +104,13 @@ def curate(
     ``lm_tables`` (with ``max_nll_e6``) adds the CCNet perplexity
     stage between quality and dedup: quality survivors are scored
     under the given REFERENCE count tables (a clean-corpus LM — any
-    N-tuple from ``lm_count_tables`` / ``trigram_count_tables`` /
-    ``ngram_count_tables`` up to the 5-gram KenLM shape, or folded
-    from the streaming state in streaming/lm_stream.py, or derived
-    from a persisted model via
+    N-tuple from ``ngram_count_tables`` up to the 5-gram KenLM shape,
+    or folded from the streaming state in streaming/lm_stream.py, or
+    derived from a persisted model via
     :func:`~mod_reservoir_spark.pipeline.lm_model.lm_model_tables`).
     Every order gates through
     :func:`~mod_reservoir_spark.pipeline.text.ngram_logprob_against`
-    (bit-identical to the dedicated bigram/trigram scorers at orders
-    2/3) with ``short_docs="backoff"``, and docs with ``n_ngrams=0``
+    with ``short_docs="backoff"``, and docs with ``n_ngrams=0``
     (empty after tokenization) drop explicitly — a doc shorter than
     the order backs off to the highest order it supports instead of
     bypassing the gate (r9; KenLM never exempts short docs).
@@ -134,7 +132,7 @@ def curate(
     so the default funnel — and the ``curate_funnel`` contract row —
     is byte-identical to before.
     ``lm_strata`` (e.g. ``("lang",)``, with tables built via
-    ``lm_count_tables(..., strata=...)``): score each document under
+    ``ngram_count_tables(..., strata=...)``): score each document under
     its own stratum's model — per-language gating, the full CCNet
     recipe; the stratum columns must exist on ``docs``.
 
@@ -301,15 +299,14 @@ def curate(
 
     # optional CCNet perplexity gate among quality survivors: any
     # ngram_count_tables shape (2-tuple = JM bigram up to the 5-gram
-    # KenLM form) scores through the order-N scorer, whose order-2/3
-    # defaults are bit-identical to the dedicated bigram/trigram
-    # scorers (exact-equality pinned). short_docs="backoff" + the
-    # explicit n_ngrams > 0 keep-condition close the r8 bypass: a doc
-    # shorter than the LM order used to score (n_ngrams=0,
-    # mean_nll_e6=0) and pass ANY threshold whenever a caller lowered
-    # quality's min_tokens below the order; now it backs off to the
-    # highest order it supports (KenLM never exempts short docs) and
-    # only genuinely empty docs hit n_ngrams=0 — which drop.
+    # KenLM form) scores through the order-N scorer.
+    # short_docs="backoff" + the explicit n_ngrams > 0 keep-condition
+    # close the r8 bypass: a doc shorter than the LM order used to
+    # score (n_ngrams=0, mean_nll_e6=0) and pass ANY threshold
+    # whenever a caller lowered quality's min_tokens below the order;
+    # now it backs off to the highest order it supports (KenLM never
+    # exempts short docs) and only genuinely empty docs hit
+    # n_ngrams=0 — which drop.
     if lm_model_path is not None:
         if lm_tables is not None:
             raise ValueError(

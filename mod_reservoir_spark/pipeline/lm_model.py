@@ -6,7 +6,7 @@ clean corpus, persist it, score every incoming crawl under it), the
 language models.
 
 The artifact is ONE table — the prefix-closed window-count frame of
-:func:`~mod_reservoir_spark.pipeline.text.ngram_count_tables_combined`
+:func:`~mod_reservoir_spark.pipeline.text.ngram_count_tables_combined_n`
 (every position's N-window, tails NULL-right-padded, one count row per
 distinct window) — plus a one-row meta sidecar (order, strata). Every
 per-order count table and every context total the interpolated scorer

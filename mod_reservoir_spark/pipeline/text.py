@@ -575,517 +575,23 @@ def unigram_logprob_scores(
     )
 
 
-def bigram_logprob_scores(
-    docs: DataFrame, text_col: str = "text", lam_ppm: int = 800000
-) -> DataFrame:
-    """Per-document mean negative log-probability under a
-    Jelinek-Mercer interpolated BIGRAM model estimated on the corpus
-    itself — one Markov order up from :func:`unigram_logprob_scores`
-    and a step closer to the KenLM-perplexity filter CCNet (Wenzek et
-    al. 2020) uses: fluency now depends on word ORDER, so shuffled or
-    stitched-together text scores high even when its token frequencies
-    look normal, which is exactly the junk the unigram score cannot
-    see.
-
-    p(w2 | w1) = lam * c(w1 w2) / c(w1 ·) + (1 - lam) * c(w2) / T
-    (Jelinek & Mercer 1980 interpolation; lam = ``lam_ppm`` / 1e6,
-    default 0.8) — the unigram back-off term keeps unseen successors
-    finite without held-out data. The score is mean(-ln p) over the
-    document's bigram positions, ×1e6 rounded to a long so a SQL
-    oracle compares exactly (same contract as the unigram score).
-
-    Scale shape: all counts are map-side-combinable groupBys on
-    bounded keys (bigram vocab, context vocab, unigram vocab); the
-    context totals c(w1 ·) roll up from the bigram table rather than
-    re-scanning the corpus; probabilities attach to the per-document
-    (w1, w2, bf) partials through three equi-joins plus one broadcast
-    scalar — a hot bigram ("of the") shuffles one row per task, never
-    one row per occurrence. No window, no Python, no driver data.
-
-    Output: (doc_id, n_bigrams, mean_nll_e6); docs with < 2 tokens
-    report 0 bigrams and 0 score.
-
-    Count tables come from the one-pass
-    :func:`ngram_count_tables_combined` build (count-identical to
-    ``lm_count_tables``, equality-pinned): flat at sf0.1, −38 % at
-    sf1, the r9 A/B. NOTE (r9 behavior change, ADVICE r9 #5): that
-    build eagerly localCheckpoints the prefix table, so CALLING this
-    function runs a Spark job (one corpus scan + shuffle) instead of
-    returning a pure lazy plan, and the checkpointed frame lives in
-    executor-local block storage — unrecoverable under executor loss
-    or dynamic allocation. For long-lived jobs, persist the model
-    instead (:func:`~mod_reservoir_spark.pipeline.lm_model.
-    write_lm_model`) and score via ``score_under_model``.
-    """
-    from mod_reservoir_spark.pipeline.lm_model import prefix_tables
-
-    prefix, n_windows = _combined_prefix(docs, 2, text_col)
-    t = prefix_tables(prefix, 2)
-    return bigram_logprob_against(
-        docs,
-        t[0].withColumnRenamed("c", "cb"),
-        t[1],
-        text_col,
-        lam_ppm,
-        broadcast_tables=n_windows <= LM_BROADCAST_MAX_WINDOWS,
-    )
-
-
-def _bigram_positions(docs: DataFrame, text_col: str) -> DataFrame:
-    """(doc_id, w1, w2, bf) — per-document bigram OCCURRENCE rows
-    (bf=1 each), the narrow base both the count tables and the scorer
-    build on.
-
-    No per-(doc, bigram) pre-aggregation (r13, guide §2.4): within-doc
-    window repeats are ~1.05× even corpus-wide, so the old
-    groupBy(doc_id, w1, w2) shuffled the full occurrence frame on
-    wide string keys to dedupe almost nothing — and neither consumer
-    needs distinct rows (the count tables re-group by (w1, w2), the
-    scorer re-groups by doc_id; both aggregate Σbf, identical over
-    occurrence rows). The partial aggregation that matters still
-    happens map-side inside those downstream groupBys."""
-    docs = spread_input(docs)
-    toks = tokens(F.coalesce(F.col(text_col), F.lit("")))
-    width = F.greatest(F.size(toks) - 1, F.lit(0))
-    # two shifted slices zipped into (w1, w2) structs: the ngram_array
-    # discipline — never element_at lambdas over the tokenization
-    # expression (re-evaluated per element inside HOFs)
-    pairs = F.zip_with(
-        F.slice(toks, 1, width),
-        F.slice(toks, 2, width),
-        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-    )
-    return (
-        docs.select("doc_id", F.explode(pairs).alias("bg"))
-        .select(
-            "doc_id", "bg.w1", "bg.w2",
-            F.lit(1).cast("long").alias("bf"),
-        )
-    )
-
-
-def lm_count_tables(
-    docs: DataFrame, text_col: str = "text", strata: tuple[str, ...] = ()
-) -> tuple[DataFrame, DataFrame]:
-    """The corpus language-model count tables: ``bigrams (w1, w2,
-    cb)`` and ``unigrams (term, ctf)``. Everything else the
-    interpolated scorer needs (context totals c(w1 ·), corpus total T)
-    derives from these two by rollup, so they are the MINIMAL
-    maintained state — and both are ADDITIVE (counts over a corpus =
-    key-wise sum of counts over its parts), which is what gives them a
-    streaming face (streaming/lm_stream.py): per-batch tables are pure
-    functions of the batch, the fold is one groupBy-sum per table.
-
-    ``strata`` (e.g. ``("lang",)``): build ONE model per stratum — the
-    CCNet shape, which trains a separate LM per language so a fluent
-    non-English document is never scored against English counts. The
-    stratum columns are prepended to both tables' keys; scoring joins
-    on them too, so each document is scored under its own stratum's
-    model (unseen strata fall to the OOV contract).
-    """
-    big_base = _bigram_positions(docs, text_col)
-    term_doc = _term_doc_counts(docs, text_col)
-    if strata:
-        # strata are per-document attributes: attach them to the
-        # per-doc partials by key, then count within each stratum
-        keys = docs.select("doc_id", *strata).distinct()
-        big_base = big_base.join(keys, "doc_id")
-        term_doc = term_doc.join(keys, "doc_id")
-    bigrams = big_base.groupBy(*strata, "w1", "w2").agg(
-        F.sum("bf").cast("long").alias("cb")
-    )
-    unigrams = term_doc.groupBy(*strata, "term").agg(
-        F.sum("tf").cast("long").alias("ctf")
-    )
-    return bigrams, unigrams
-
-
-def bigram_logprob_against(
-    docs: DataFrame,
-    bigrams: DataFrame,
-    unigrams: DataFrame,
-    text_col: str = "text",
-    lam_ppm: int = 800000,
-    oov_ppm: int = 1,
-    strata: tuple[str, ...] = (),
-    broadcast_tables: bool = False,
-) -> DataFrame:
-    """Score documents under GIVEN LM count tables — the production
-    form of :func:`bigram_logprob_scores` and the shape CCNet actually
-    uses: the reference model is estimated on a CLEAN corpus
-    (Wikipedia, in the paper) and incoming web documents are ranked by
-    their NLL under it; self-scoring is the special case where the
-    tables come from ``lm_count_tables(docs)`` itself.
-
-    Out-of-vocabulary contract (can only trigger when the tables come
-    from a DIFFERENT corpus): an unseen bigram simply contributes no
-    interpolation mass (its lam·cb/c1 term is 0 — the unigram back-off
-    carries it, the standard JM behavior); an unseen UNIGRAM gets the
-    fixed floor probability ``oov_ppm``/1e6 (default 1e-6) so the NLL
-    stays finite — documents full of never-seen tokens score ≈
-    -ln(1e-6) ≈ 13.8, the worst band. On the self-scoring path every
-    count is ≥ 1, so neither guard fires and the arithmetic is
-    bit-identical to the contract row's oracle.
-
-    ``strata`` (matching the tables built with
-    ``lm_count_tables(strata=...)``): every document is scored under
-    its OWN stratum's model — e.g. per-language models, the CCNet
-    shape. All joins (bigram, context, unigram, stratum total) gain
-    the stratum keys; a document whose stratum has no model falls
-    entirely to the OOV floor. Scoring with strata over a corpus
-    equals scoring each stratum's sub-corpus under its own unstratified
-    tables (pinned in tests).
-    """
-    per_doc = _bigram_positions(docs, text_col)
-    if strata:
-        per_doc = per_doc.join(
-            docs.select("doc_id", *strata).distinct(), "doc_id"
-        )
-    skeys = list(strata)
-    # unigrams are consumed twice (per-doc attach + the _total fold),
-    # but NOT persisted: the r14 order-balanced A/B measured the
-    # persist as a pure loss at bench scale (the kn lesson — each
-    # persist is a materialization barrier + cache write; the second
-    # reference is a cheap re-aggregation of the checkpointed prefix),
-    # and at 100 TB the table derives from the one checkpointed
-    # prefix scan either way. The bigram table is consumed ONCE — see
-    # below.
-    # context totals FOLD into the bigram table before the per-doc
-    # join (vocab-sized), so the big per-doc frame shuffles twice —
-    # (w1,w2) and (w2) — instead of three times. Value-identical: a
-    # missing bigram row scores 0 under the zero-context guard whether
-    # or not c(w1 ·) exists (lam·coalesce(cb,0)/c1 is 0, the otherwise
-    # branch is the same 0.0) — the r8 trigram-folding argument one
-    # order down, hash-pinned by the live contract rows. The fold is a
-    # WINDOW sum over the vocab-bounded table (r13, guide §2.4 — one
-    # pass over the same rows instead of groupBy + join-back; window
-    # partitions are context keys of the COUNT TABLE, bounded by
-    # vocabulary branching, so no skew risk).
-    bi_with_ctx = bigrams.withColumn(
-        "c1",
-        F.sum("cb").over(Window.partitionBy(*skeys, "w1")).cast("long"),
-    )
-    lam = lam_ppm / 1000000.0
-    bigram_term = F.when(
-        F.coalesce(F.col("c1"), F.lit(0)) > 0,
-        F.lit(lam) * F.coalesce(F.col("cb"), F.lit(0)) / F.col("c1"),
-    ).otherwise(F.lit(0.0))
-    unigram_term = F.when(
-        F.coalesce(F.col("ctf"), F.lit(0)) > 0,
-        F.lit(1.0 - lam) * F.col("ctf") / F.col("_total"),
-    ).otherwise(F.lit(oov_ppm / 1000000.0))
-    p = bigram_term + unigram_term
-    scored = per_doc.join(
-        _table_side(bi_with_ctx, broadcast_tables),
-        skeys + ["w1", "w2"],
-        "left",
-    ).join(
-        _table_side(
-            unigrams.withColumnRenamed("term", "w2"), broadcast_tables
-        ),
-        skeys + ["w2"],
-        "left",
-    )
-    if strata:
-        totals = unigrams.groupBy(*skeys).agg(
-            F.sum("ctf").cast("long").alias("_total")
-        )
-        scored = scored.join(F.broadcast(totals), skeys, "left")
-    else:
-        totals = unigrams.select(
-            F.sum("ctf").cast("long").alias("_total")
-        )
-        scored = scored.crossJoin(F.broadcast(totals))
-    scored = (
-        scored.groupBy("doc_id")
-        .agg(
-            F.sum("bf").cast("long").alias("n_bigrams"),
-            F.sum(F.col("bf") * -F.log(p)).alias("_nll_sum"),
-        )
-        .withColumn(
-            "mean_nll_e6",
-            F.round(
-                F.col("_nll_sum") / F.col("n_bigrams") * 1000000
-            ).cast("long"),
-        )
-        .select("doc_id", "n_bigrams", "mean_nll_e6")
-    )
-    return (
-        docs.select("doc_id")
-        .join(scored, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_bigrams", F.lit(0)).cast("long").alias("n_bigrams"),
-            F.coalesce("mean_nll_e6", F.lit(0))
-            .cast("long")
-            .alias("mean_nll_e6"),
-        )
-    )
-
-
-def _trigram_positions(docs: DataFrame, text_col: str) -> DataFrame:
-    """(doc_id, w1, w2, w3, tf3) — per-document trigram OCCURRENCE
-    rows (tf3=1 each; :func:`_bigram_positions` discipline — no
-    per-doc pre-aggregation shuffle, consumers re-aggregate)."""
-    docs = spread_input(docs)
-    toks = tokens(F.coalesce(F.col(text_col), F.lit("")))
-    width = F.greatest(F.size(toks) - 2, F.lit(0))
-    pairs = F.zip_with(
-        F.slice(toks, 1, width),
-        F.slice(toks, 2, width),
-        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-    )
-    triples = F.zip_with(
-        pairs,
-        F.slice(toks, 3, width),
-        lambda p, c: F.struct(
-            p["w1"].alias("w1"), p["w2"].alias("w2"), c.alias("w3")
-        ),
-    )
-    return (
-        docs.select("doc_id", F.explode(triples).alias("tg"))
-        .select(
-            "doc_id", "tg.w1", "tg.w2", "tg.w3",
-            F.lit(1).cast("long").alias("tf3"),
-        )
-    )
-
-
-def trigram_count_tables(
-    docs: DataFrame, text_col: str = "text", strata: tuple[str, ...] = ()
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The order-3 LM count tables: ``trigrams (w1, w2, w3, ct)`` plus
-    the :func:`lm_count_tables` pair — the minimal ADDITIVE state for
-    the interpolated-backoff trigram scorer (context totals c(w1 w2 ·)
-    and c(w2 ·) roll up from these, never from the corpus). Same
-    streaming-fold contract as the bigram tables
-    (streaming/lm_stream.py: per-batch tables are pure functions of
-    the batch, the fold is one groupBy-sum per table). ``strata``
-    builds one model per stratum, the CCNet per-language shape."""
-    tri_base = _trigram_positions(docs, text_col)
-    if strata:
-        keys = docs.select("doc_id", *strata).distinct()
-        tri_base = tri_base.join(keys, "doc_id")
-    trigrams = tri_base.groupBy(*strata, "w1", "w2", "w3").agg(
-        F.sum("tf3").cast("long").alias("ct")
-    )
-    bigrams, unigrams = lm_count_tables(docs, text_col, strata)
-    return trigrams, bigrams, unigrams
-
-
-def trigram_logprob_against(
-    docs: DataFrame,
-    trigrams: DataFrame,
-    bigrams: DataFrame,
-    unigrams: DataFrame,
-    text_col: str = "text",
-    lam3_ppm: int = 600000,
-    lam2_ppm: int = 300000,
-    oov_ppm: int = 1,
-    strata: tuple[str, ...] = (),
-    broadcast_tables: bool = False,
-) -> DataFrame:
-    """Per-document mean NLL under an order-3 Jelinek-Mercer
-    interpolated-backoff model over GIVEN count tables — one Markov
-    order up from :func:`bigram_logprob_against`, a step closer to the
-    5-gram KenLM filter the CCNet recipe (Wenzek et al. 2020) uses
-    (VERDICT r7 Next #5):
-
-    p(w3 | w1 w2) = l3 * c(w1 w2 w3) / c(w1 w2 ·)
-                  + l2 * c(w2 w3) / c(w2 ·)
-                  + (1 - l3 - l2) * c(w3) / T
-
-    (l3 = ``lam3_ppm``/1e6, l2 = ``lam2_ppm``/1e6; defaults 0.6/0.3
-    leave 0.1 unigram mass). The OOV contract extends the bigram one
-    order up: an unseen trigram or bigram contributes no interpolation
-    mass when its CONTEXT count is zero (the lower orders carry it —
-    standard JM backoff), and an unseen unigram gets the fixed
-    ``oov_ppm``/1e6 floor so the NLL stays finite. On the self-scoring
-    path every context count is ≥ 1, so the arithmetic is
-    bit-identical to the contract row's DuckDB oracle.
-
-    Scale shape (the bigram scorer's, one join wider): all count
-    tables are map-side-combinable groupBys on vocab-bounded keys;
-    both context tables roll up from the trigram/bigram tables rather
-    than re-scanning the corpus; probabilities attach to the per-doc
-    (w1, w2, w3, tf3) partials through five equi-joins plus one
-    broadcast scalar — a hot trigram shuffles one row per task, never
-    one row per occurrence. No window, no Python, no driver data.
-
-    Output: (doc_id, n_trigrams, mean_nll_e6); docs with < 3 tokens
-    report 0 trigrams and 0 score (callers gating on a max-NLL
-    threshold must exclude n_trigrams=0 rows — or score through
-    :func:`ngram_logprob_against` with ``short_docs="backoff"``, which
-    is bit-identical at order 3 for full-length docs and backs short
-    docs off to the highest order they support). The per-doc partials
-    are deliberately recomputed lazily rather than checkpointed: the
-    frame is two narrow projections off the source and the r8 A/B
-    measured eager checkpointing WORSE at both sf1 and sf10.
-    """
-    per_doc = _trigram_positions(docs, text_col)
-    if strata:
-        per_doc = per_doc.join(
-            docs.select("doc_id", *strata).distinct(), "doc_id"
-        )
-    skeys = list(strata)
-    # Context totals are FOLDED into their count tables before the
-    # per-doc joins (vocab-sized join each), so the big per-doc frame
-    # shuffles 3 times — (w1,w2,w3), (w2,w3), (w3) — instead of 5.
-    # Values are identical: whenever a count row is missing its folded
-    # context is NULL too, and that case already scored 0 under the
-    # zero-context guard (lam·coalesce(count,0)/ctx is 0 for any ctx
-    # when the count is 0, and the otherwise-branch is the same 0.0).
-    # context folds are WINDOW sums over the vocab-bounded count
-    # tables (r13, guide §2.4 — one pass over the same rows instead of
-    # groupBy + join-back per order; window partitions are context
-    # keys of the COUNT TABLE, bounded by vocabulary branching). Each
-    # table is consumed once now, so the former per-table persists are
-    # gone with their second consumers; the unigram persist went in
-    # r14 (the kn lesson: a persist of a prefix-derived table is a
-    # barrier + cache write that loses to re-aggregating the
-    # checkpointed prefix).
-    tri_with_ctx = trigrams.withColumn(
-        "c2",
-        F.sum("ct")
-        .over(Window.partitionBy(*skeys, "w1", "w2"))
-        .cast("long"),
-    )
-    # the bigram-order backoff needs c(w2 w3) and c(w2 ·): rename the
-    # bigram table's (w1, w2) to this scorer's (w2, w3) position names
-    bi_with_ctx = bigrams.withColumn(
-        "c1",
-        F.sum("cb").over(Window.partitionBy(*skeys, "w1")).cast("long"),
-    ).select(
-        *skeys,
-        F.col("w1").alias("w2"),
-        F.col("w2").alias("w3"),
-        "cb",
-        "c1",
-    )
-    l3 = lam3_ppm / 1000000.0
-    l2 = lam2_ppm / 1000000.0
-    tri_term = F.when(
-        F.coalesce(F.col("c2"), F.lit(0)) > 0,
-        F.lit(l3) * F.coalesce(F.col("ct"), F.lit(0)) / F.col("c2"),
-    ).otherwise(F.lit(0.0))
-    bi_term = F.when(
-        F.coalesce(F.col("c1"), F.lit(0)) > 0,
-        F.lit(l2) * F.coalesce(F.col("cb"), F.lit(0)) / F.col("c1"),
-    ).otherwise(F.lit(0.0))
-    uni_term = F.when(
-        F.coalesce(F.col("ctf"), F.lit(0)) > 0,
-        F.lit(1.0 - l3 - l2) * F.col("ctf") / F.col("_total"),
-    ).otherwise(F.lit(oov_ppm / 1000000.0))
-    p = tri_term + bi_term + uni_term
-    scored = (
-        per_doc.join(
-            _table_side(tri_with_ctx, broadcast_tables),
-            skeys + ["w1", "w2", "w3"],
-            "left",
-        )
-        .join(
-            _table_side(bi_with_ctx, broadcast_tables),
-            skeys + ["w2", "w3"],
-            "left",
-        )
-        .join(
-            _table_side(
-                unigrams.withColumnRenamed("term", "w3"), broadcast_tables
-            ),
-            skeys + ["w3"],
-            "left",
-        )
-    )
-    if strata:
-        totals = unigrams.groupBy(*skeys).agg(
-            F.sum("ctf").cast("long").alias("_total")
-        )
-        scored = scored.join(F.broadcast(totals), skeys, "left")
-    else:
-        totals = unigrams.select(
-            F.sum("ctf").cast("long").alias("_total")
-        )
-        scored = scored.crossJoin(F.broadcast(totals))
-    scored = (
-        scored.groupBy("doc_id")
-        .agg(
-            F.sum("tf3").cast("long").alias("n_trigrams"),
-            F.sum(F.col("tf3") * -F.log(p)).alias("_nll_sum"),
-        )
-        .withColumn(
-            "mean_nll_e6",
-            F.round(
-                F.col("_nll_sum") / F.col("n_trigrams") * 1000000
-            ).cast("long"),
-        )
-        .select("doc_id", "n_trigrams", "mean_nll_e6")
-    )
-    return (
-        docs.select("doc_id")
-        .join(scored, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_trigrams", F.lit(0))
-            .cast("long")
-            .alias("n_trigrams"),
-            F.coalesce("mean_nll_e6", F.lit(0))
-            .cast("long")
-            .alias("mean_nll_e6"),
-        )
-    )
-
-
-def trigram_logprob_scores(
-    docs: DataFrame,
-    text_col: str = "text",
-    lam3_ppm: int = 600000,
-    lam2_ppm: int = 300000,
-) -> DataFrame:
-    """Self-scoring form of :func:`trigram_logprob_against` (tables
-    estimated on the corpus itself) — the contract-row shape, like
-    :func:`bigram_logprob_scores` one order down.
-
-    The per-doc partials deliberately stay LAZY (recomputed by the
-    table build and the scorer): an eager localCheckpoint of the
-    near-corpus-sized partials frame was measured SLOWER at every
-    scale (sf0.1 4.3→7.1 s, sf10 126→272 s — the block-store
-    round-trip of ~rows×positions rows costs more than re-running the
-    narrow tokenize+explode, which pipelines inside each consumer's
-    shuffle map stage). The curate() materialize lesson does not
-    transfer: there the re-derived subtree was the WHOLE multi-stage
-    funnel, here it is one narrow projection. Measured in SCALE.md
-    round 8.
-
-    Count tables come from the one-pass
-    :func:`ngram_count_tables_combined` build (count-identical to
-    ``trigram_count_tables``, equality-pinned): −23 % at sf0.1,
-    −42 % at sf1, the r9 A/B. NOTE: that build eagerly
-    localCheckpoints the prefix table — calling this function runs a
-    Spark job, and the frame pins to executor-local storage (see
-    :func:`bigram_logprob_scores` for the long-lived-job
-    alternative)."""
-    from mod_reservoir_spark.pipeline.lm_model import prefix_tables
-
-    prefix, n_windows = _combined_prefix(docs, 3, text_col)
-    t = prefix_tables(prefix, 3)
-    return trigram_logprob_against(
-        docs,
-        t[0].withColumnRenamed("c", "ct"),
-        t[1].withColumnRenamed("c", "cb"),
-        t[2],
-        text_col,
-        lam3_ppm,
-        lam2_ppm,
-        broadcast_tables=n_windows <= LM_BROADCAST_MAX_WINDOWS,
-    )
-
-
 def _ngram_positions(
     docs: DataFrame, text_col: str, k: int, pad_short: bool = False
 ) -> DataFrame:
-    """(doc_id, w1..wk, tf) — per-document k-gram-occurrence partials,
-    the :func:`_bigram_positions` shifted-slices discipline at any
-    order (never element_at lambdas over the tokenization).
+    """(doc_id, w1..wk, tf) — per-document k-gram OCCURRENCE rows
+    (k >= 2, tf=1 each), the narrow base both the count tables and the
+    scorers build on. k shifted token slices are zipped into (w1..wk)
+    structs — never element_at lambdas over the tokenization
+    expression (re-evaluated per element inside HOFs).
+
+    No per-(doc, k-gram) pre-aggregation (r13, guide §2.4): within-doc
+    window repeats are ~1.05× even corpus-wide, so a groupBy(doc_id,
+    w1..wk) would shuffle the full occurrence frame on wide string
+    keys to dedupe almost nothing — and no consumer needs distinct
+    rows (the count tables re-group by w1..wk, the scorers by doc_id;
+    both aggregate Σtf, identical over occurrence rows). The partial
+    aggregation that matters still happens map-side inside those
+    downstream groupBys.
 
     ``pad_short``: docs with 1 ≤ t < k tokens, which the full-window
     path drops entirely, additionally emit ONE right-aligned window —
@@ -1098,8 +604,13 @@ def _ngram_positions(
     docs = spread_input(docs)
     toks = tokens(F.coalesce(F.col(text_col), F.lit("")))
     width = F.greatest(F.size(toks) - (k - 1), F.lit(0))
-    grams = F.slice(toks, 1, width)
-    acc = F.transform(grams, lambda a: F.struct(a.alias("w1")))
+    # the first two slices zip straight into (w1, w2) — no one-field
+    # struct pass over the array first, so order 2 is ONE zip_with
+    acc = F.zip_with(
+        F.slice(toks, 1, width),
+        F.slice(toks, 2, width),
+        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
+    )
 
     def _extend(j):
         # closure factory: a default-arg lambda would grow a THIRD
@@ -1109,7 +620,7 @@ def _ngram_positions(
             c.alias(f"w{j}"),
         )
 
-    for j in range(2, k + 1):
+    for j in range(3, k + 1):
         acc = F.zip_with(acc, F.slice(toks, j, width), _extend(j))
     cols = [f"w{i}" for i in range(1, k + 1)]
     if pad_short:
@@ -1141,8 +652,7 @@ def _ngram_positions(
         .select(
             "doc_id",
             *[f"g.{c}" for c in cols],
-            # occurrence rows, tf=1 each — no per-doc pre-aggregation
-            # shuffle (see _bigram_positions); consumers re-aggregate
+            # occurrence rows, tf=1 each — consumers re-aggregate
             F.lit(1).cast("long").alias("tf"),
         )
     )
@@ -1156,12 +666,20 @@ def ngram_count_tables(
 ) -> list[DataFrame]:
     """The order-N LM count tables, highest order first:
     ``[N-grams (w1..wN, c), ..., bigrams (w1, w2, c), unigrams
-    (term, ctf)]`` — the same additive/streaming-fold/strata contract
-    as :func:`lm_count_tables` at every order (counts over a corpus =
-    key-wise sum over its parts). order=2 and order=3 produce exactly
-    the tables ``lm_count_tables`` / ``trigram_count_tables`` build
-    (count-column names normalized to ``c``; unigrams keep
-    ``term``/``ctf``)."""
+    (term, ctf)]``. Everything else the interpolated scorers need
+    (context totals, the corpus total T) derives from these by rollup,
+    so they are the MINIMAL maintained state — and every table is
+    ADDITIVE (counts over a corpus = key-wise sum of counts over its
+    parts), which is what gives them a streaming face
+    (streaming/lm_stream.py): per-batch tables are pure functions of
+    the batch, the fold is one groupBy-sum per table.
+
+    ``strata`` (e.g. ``("lang",)``): build ONE model per stratum — the
+    CCNet shape, which trains a separate LM per language so a fluent
+    non-English document is never scored against English counts. The
+    stratum columns are prepended to every table's keys; scoring joins
+    on them too, so each document is scored under its own stratum's
+    model (unseen strata fall to the OOV contract)."""
     if order < 2:
         raise ValueError("order must be >= 2")
     keys = None
@@ -1189,56 +707,43 @@ def ngram_count_tables(
     return tables
 
 
-def ngram_count_tables_combined(
-    docs: DataFrame,
-    order: int,
-    text_col: str = "text",
-    strata: tuple[str, ...] = (),
-) -> list[DataFrame]:
-    """:func:`ngram_count_tables` built in ONE corpus pass — the KenLM
-    counting shape: tokens right-padded with N-1 NULLs so EVERY
-    position yields one N-window (tail windows carry trailing NULLs),
-    one map-side-combinable groupBy turns the positions into a
-    prefix-closed window-count table, and every order's count table —
-    order k = group the prefix table by w1..wk where wk IS NOT NULL —
-    plus every context fold downstream derives from that one frame.
-    Versus the per-order build: 1 corpus scan + 1 corpus-sized shuffle
-    instead of N scans + 2N shuffles; the derived aggregations touch
-    only the (distinct-window-sized) prefix table.
-
-    The prefix table is localCheckpoint'ed and materialized before
-    return (by the same job that counts it — see
-    :func:`_combined_prefix`): it is a multi-stage subtree (scan →
-    explode → shuffle) consumed ~2N times by the tables and their
-    context folds, exactly the case the curate() materialize lesson
-    covers (Catalyst shares no non-identical subtrees) — at production scale this frame IS the
-    persisted LM model (:mod:`~mod_reservoir_spark.pipeline.lm_model`
-    writes/reads it as the serving artifact). Counts are EXACTLY
-    ngram_count_tables' (equality-pinned per order in tests); use the
-    per-order builder when you need lazy/additive frames (the
-    streaming fold commits per-batch tables, where each order's
-    partition must stand alone).
-    """
-    from mod_reservoir_spark.pipeline.lm_model import prefix_tables
-
-    tables, _ = ngram_count_tables_combined_n(docs, order, text_col, strata)
-    return tables
-
-
 def ngram_count_tables_combined_n(
     docs: DataFrame,
     order: int,
     text_col: str = "text",
     strata: tuple[str, ...] = (),
 ) -> tuple[list[DataFrame], int]:
-    """:func:`ngram_count_tables_combined` plus the prefix row count
-    the build already paid for (the checkpoint-materializing job IS a
-    count since r11) — so callers composing their own
-    ``*_logprob_against`` scoring can make the broadcast-vs-merge
-    decision against ``LM_BROADCAST_MAX_WINDOWS`` for free instead of
-    inheriting the merge-hinted safety default. The contract's
-    per-language row regressed exactly this way in r10: the safe
-    default cost it the measured broadcast win at bench scale."""
+    """(:func:`ngram_count_tables` built in ONE corpus pass, the prefix
+    row count) — the KenLM counting shape: tokens right-padded with N-1
+    NULLs so EVERY position yields one N-window (tail windows carry
+    trailing NULLs), one map-side-combinable groupBy turns the
+    positions into a prefix-closed window-count table, and every
+    order's count table — order k = group the prefix table by w1..wk
+    where wk IS NOT NULL — plus every context fold downstream derives
+    from that one frame. Versus the per-order build: 1 corpus scan + 1
+    corpus-sized shuffle instead of N scans + 2N shuffles; the derived
+    aggregations touch only the (distinct-window-sized) prefix table.
+
+    The prefix table is localCheckpoint'ed and materialized before
+    return (by the same job that counts it — see
+    :func:`_combined_prefix`): it is a multi-stage subtree (scan →
+    explode → shuffle) consumed ~2N times by the tables and their
+    context folds, exactly the case the curate() materialize lesson
+    covers (Catalyst shares no non-identical subtrees) — at production
+    scale this frame IS the persisted LM model
+    (:mod:`~mod_reservoir_spark.pipeline.lm_model` writes/reads it as
+    the serving artifact). Counts are EXACTLY ngram_count_tables'
+    (equality-pinned per order in tests); use ngram_count_tables
+    when you need lazy/additive frames (the streaming fold commits
+    per-batch tables, where each order's partition must stand alone).
+
+    The row count is the one the checkpoint-materializing job already
+    paid for, so callers composing their own ``*_logprob_against``
+    scoring make the broadcast-vs-merge decision against
+    ``LM_BROADCAST_MAX_WINDOWS`` for free instead of inheriting the
+    merge-hinted safety default. The contract's per-language row
+    regressed exactly this way in r10: the safe default cost it the
+    measured broadcast win at bench scale."""
     from mod_reservoir_spark.pipeline.lm_model import prefix_tables
 
     prefix, n_windows = _combined_prefix(docs, order, text_col, strata)
@@ -1252,7 +757,7 @@ def _combined_prefix(
     strata: tuple[str, ...] = (),
 ) -> tuple[DataFrame, int]:
     """(checkpointed prefix frame, n_windows) behind
-    :func:`ngram_count_tables_combined`.
+    :func:`ngram_count_tables_combined_n`.
 
     ONE job, not two (r10 VERDICT #3): ``localCheckpoint(eager=True)``
     internally runs a count job just to materialize the blocks, and
@@ -1299,9 +804,28 @@ def _table_side(t: DataFrame, broadcast: bool) -> DataFrame:
     return F.broadcast(t) if broadcast else t.hint("merge")
 
 
+def _check_count_tables(
+    tables: list[DataFrame], strata: tuple[str, ...]
+) -> None:
+    """Every conditional (order >= 2) table must be strata + positional
+    w* keys + exactly one count column named ``c`` — the
+    :func:`ngram_count_tables` / ``prefix_tables`` / lm_stream fold
+    shape the LM scorers join on."""
+    for t in tables[:-1]:
+        extra = [
+            col
+            for col in t.columns
+            if col not in strata
+            and not (col.startswith("w") and col[1:].isdigit())
+        ]
+        if extra != ["c"]:
+            raise ValueError(
+                f"conditional table needs one count column 'c', got {extra}"
+            )
+
+
 # default interpolation weights (ppm) per order for the conditional
 # terms, highest order first; the unigram weight is the remainder.
-# order 2/3 match the bigram/trigram scorers' defaults exactly.
 _NGRAM_DEFAULT_LAMBDAS = {
     2: (800000,),
     3: (600000, 300000),
@@ -1321,28 +845,54 @@ def ngram_logprob_against(
     broadcast_tables: bool = False,
 ) -> DataFrame:
     """Per-document mean NLL under an order-N Jelinek-Mercer
-    interpolated-backoff model — the generalization the bigram and
-    trigram scorers are instances of, reaching the 5-gram shape of
-    CCNet's KenLM filter (Wenzek et al. 2020):
+    interpolated-backoff model over GIVEN count tables — the one JM
+    scorer of the repo, from the bigram model up to the 5-gram shape
+    of CCNet's KenLM filter (Wenzek et al. 2020). This is the
+    production shape CCNet uses: the reference model is estimated on a
+    CLEAN corpus (Wikipedia, in the paper) and incoming web documents
+    are ranked by their NLL under it; self-scoring
+    (:func:`ngram_logprob_scores`) is the special case where the tables
+    come from the corpus itself:
 
     p(wN | w1..wN-1) = sum over j=N..2 of
         l_j * c_j(last j words) / c_j(last j words minus wN, ·)
       + (1 - sum l_j) * c(wN) / T
 
     ``tables``: :func:`ngram_count_tables` order (highest first,
-    unigrams last); N = len(tables). ``lambdas_ppm``: one weight per
+    unigrams last); N = len(tables); every conditional table carries
+    one count column ``c``. ``lambdas_ppm``: one weight per
     conditional order, highest first (defaults for N ≤ 5 in
-    ``_NGRAM_DEFAULT_LAMBDAS``; order 2/3 defaults make this function
-    BIT-IDENTICAL to :func:`bigram_logprob_against` /
-    :func:`trigram_logprob_against` — pinned by exact-equality tests).
-    Same OOV contract: a zero-context conditional term contributes 0,
-    an unseen unigram gets the ``oov_ppm``/1e6 floor.
+    ``_NGRAM_DEFAULT_LAMBDAS``: 0.8 at order 2, 0.6/0.3 at order 3 —
+    the weights the bigram/trigram rows' DuckDB oracles replicate).
 
-    Scale shape (the trigram scorer's, generalized): every context
-    total FOLDS into its count table before the per-doc joins
-    (vocab-sized joins), so the per-doc N-gram frame shuffles N times
-    — once per order plus the unigram attach — never once per
-    occurrence; one broadcast scalar total; no Window, no Python.
+    Out-of-vocabulary contract (can only trigger when the tables come
+    from a DIFFERENT corpus): a conditional term whose CONTEXT count is
+    zero contributes no interpolation mass (the lower orders carry it
+    — standard JM backoff), and an unseen UNIGRAM gets the fixed floor
+    probability ``oov_ppm``/1e6 (default 1e-6) so the NLL stays finite
+    — documents full of never-seen tokens score ≈ -ln(1e-6) ≈ 13.8,
+    the worst band. On the self-scoring path every count is ≥ 1, so
+    neither guard fires and the arithmetic is bit-identical to the
+    contract rows' oracles.
+
+    ``strata`` (matching tables built with ``strata=...``): every
+    document is scored under its OWN stratum's model — e.g.
+    per-language models, the CCNet shape. All joins (every order, the
+    stratum total) gain the stratum keys; a document whose stratum has
+    no model falls entirely to the OOV floor. Scoring with strata over
+    a corpus equals scoring each stratum's sub-corpus under its own
+    unstratified tables (pinned in tests).
+
+    Scale shape: all count tables are map-side-combinable groupBys on
+    vocab-bounded keys; every context total FOLDS into its count table
+    before the per-doc joins (vocab-sized joins), so the per-doc
+    N-gram frame shuffles N times — once per order plus the unigram
+    attach — never once per occurrence: a hot n-gram ("of the")
+    shuffles one row per task. One broadcast scalar total; no Python.
+    The per-doc partials are deliberately recomputed lazily rather
+    than checkpointed: the frame is two narrow projections off the
+    source, and eager checkpointing was measured WORSE at every scale
+    (order 3: sf0.1 4.3→7.1 s, sf10 126→272 s; SCALE.md round 8).
 
     Output: (doc_id, n_ngrams, mean_nll_e6). ``short_docs`` picks the
     contract for docs with 1 ≤ t < N tokens:
@@ -1371,9 +921,9 @@ def ngram_logprob_against(
     broadcast threshold even for 24M-row tables; the estimate-driven
     plan OOM'ed at sf10, SCALE.md r10). True broadcasts every table
     explicitly — the measured win when the model is genuinely small
-    (sf0.1/sf1). Callers that can count the prefix cheaply (the
-    scores() wrappers after their checkpoint, score_under_model from
-    the meta sidecar) decide via ``LM_BROADCAST_MAX_WINDOWS``.
+    (sf0.1/sf1). Callers that can count the prefix cheaply
+    (:func:`ngram_count_tables_combined_n`, score_under_model from the
+    meta sidecar) decide via ``LM_BROADCAST_MAX_WINDOWS``.
     """
     n = len(tables)
     if n < 2:
@@ -1403,27 +953,7 @@ def ngram_logprob_against(
             f"got {sum(lambdas_ppm)}"
         )
     skeys = list(strata)
-    # tolerate the dedicated builders' count-column names (lm_count_
-    # tables' cb, trigram_count_tables' ct/cb): each conditional table
-    # is strata + positional w* keys + exactly one count column —
-    # normalize it to ngram_count_tables' `c` so all three table
-    # families score through this one function
-    fixed = []
-    for t in tables[:-1]:
-        extra = [
-            col
-            for col in t.columns
-            if col not in skeys
-            and not (col.startswith("w") and col[1:].isdigit())
-        ]
-        if len(extra) != 1:
-            raise ValueError(
-                f"conditional table needs one count column, got {extra}"
-            )
-        fixed.append(
-            t if extra[0] == "c" else t.withColumnRenamed(extra[0], "c")
-        )
-    tables = fixed + [tables[-1]]
+    _check_count_tables(tables, strata)
     per_doc = _ngram_positions(
         docs, text_col, n, pad_short=(short_docs == "backoff")
     )
@@ -1552,24 +1082,30 @@ def ngram_logprob_scores(
     short_docs: str = "zero",
 ) -> DataFrame:
     """Self-scoring form of :func:`ngram_logprob_against` at any order
-    (tables estimated on the corpus itself) — what
-    :func:`bigram_logprob_scores` / :func:`trigram_logprob_scores` are
-    at orders 2/3, up to the 5-gram KenLM shape. The per-doc partials
-    deliberately stay lazy (the trigram scorer's measured decision:
-    eager checkpointing of the near-corpus-sized partials frame lost
-    at every scale), but the count tables come from the ONE-pass
-    :func:`ngram_count_tables_combined` build: A/B-measured −26 % at
-    sf0.1 and −41 % at sf1 end-to-end vs the per-order builder (order
-    5), with the gap widening as corpus scans dominate — counts
-    equality-pinned per order. NOTE: the combined build eagerly
-    localCheckpoints the prefix table — calling this function runs a
-    Spark job, and the frame pins to executor-local storage; for
-    long-lived jobs persist the model via ``write_lm_model`` and use
-    ``score_under_model`` (see :func:`bigram_logprob_scores`)."""
-    from mod_reservoir_spark.pipeline.lm_model import prefix_tables
+    (tables estimated on the corpus itself) — the self-perplexity
+    quality signal one or more Markov orders up from
+    :func:`unigram_logprob_scores`: fluency now depends on word ORDER,
+    so shuffled or stitched-together text scores high even when its
+    token frequencies look normal. Order 2 and order 3 are the bigram
+    and trigram contract rows; order 5 is the KenLM shape.
 
-    prefix, n_windows = _combined_prefix(docs, order, text_col, strata)
-    tables = prefix_tables(prefix, order, strata)
+    The per-doc partials deliberately stay lazy (eager checkpointing
+    of the near-corpus-sized partials frame lost at every scale), but
+    the count tables come from the ONE-pass
+    :func:`ngram_count_tables_combined_n` build: A/B-measured −26 % at
+    sf0.1 and −41 % at sf1 end-to-end vs the per-order builder (order
+    5; −23 %/−42 % at order 3), with the gap widening as corpus scans
+    dominate — counts equality-pinned per order. NOTE (ADVICE r9 #5):
+    that build localCheckpoints the prefix table, so CALLING this
+    function runs a Spark job (one corpus scan + shuffle) instead of
+    returning a pure lazy plan, and the checkpointed frame lives in
+    executor-local block storage — unrecoverable under executor loss
+    or dynamic allocation. For long-lived jobs, persist the model
+    instead (:func:`~mod_reservoir_spark.pipeline.lm_model.
+    write_lm_model`) and score via ``score_under_model``."""
+    tables, n_windows = ngram_count_tables_combined_n(
+        docs, order, text_col, strata
+    )
     return ngram_logprob_against(
         docs,
         tables,
@@ -1721,25 +1257,7 @@ def kn_logprob_against(
     discounts_ppm = specs
     need_cls = any(not isinstance(s, int) for s in specs)
     skeys = list(strata)
-    # normalize count-column names exactly as the JM scorer does, so
-    # lm_count_tables / trigram_count_tables / prefix_tables output
-    # all score through this function
-    fixed = []
-    for t in tables[:-1]:
-        extra = [
-            col
-            for col in t.columns
-            if col not in skeys
-            and not (col.startswith("w") and col[1:].isdigit())
-        ]
-        if len(extra) != 1:
-            raise ValueError(
-                f"conditional table needs one count column, got {extra}"
-            )
-        fixed.append(
-            t if extra[0] == "c" else t.withColumnRenamed(extra[0], "c")
-        )
-    tables = fixed + [tables[-1]]
+    _check_count_tables(tables, strata)
     per_doc = _ngram_positions(
         docs, text_col, n, pad_short=(short_docs == "backoff")
     )
@@ -1984,6 +1502,7 @@ def estimate_kn_discounts_ppm(
     if n < 3:
         raise ValueError("kn needs at least trigram tables (order >= 3)")
     skeys = list(strata)
+    _check_count_tables(tables, strata)
     out: list = []
 
     def _d_spec(counts_col: DataFrame, col: str):
@@ -2014,13 +1533,7 @@ def estimate_kn_discounts_ppm(
         return tuple(trip)
 
     # top order: raw counts
-    top = tables[0]
-    ccol = [
-        c
-        for c in top.columns
-        if c not in skeys and not (c.startswith("w") and c[1:].isdigit())
-    ][0]
-    out.append(_d_spec(top, ccol))
+    out.append(_d_spec(tables[0], "c"))
     # middle orders j = N-1..2: continuation counts from the
     # (j+1)-gram table (group the distinct types by their last j words)
     for j in range(n - 1, 1, -1):
@@ -2047,10 +1560,9 @@ def kn_logprob_scores(
     the smoothing arithmetic). The broadcast-vs-merge join decision
     comes from the prefix count the build already paid for
     (``LM_BROADCAST_MAX_WINDOWS`` — never Spark's estimate)."""
-    from mod_reservoir_spark.pipeline.lm_model import prefix_tables
-
-    prefix, n_windows = _combined_prefix(docs, order, text_col, strata)
-    tables = prefix_tables(prefix, order, strata)
+    tables, n_windows = ngram_count_tables_combined_n(
+        docs, order, text_col, strata
+    )
     return kn_logprob_against(
         docs,
         tables,
@@ -2095,21 +1607,21 @@ def perplexity_buckets(
     available (pre-bucket a dominant language).
 
     ``scorer``: ``"unigram"`` (default, the contract row's model),
-    ``"bigram"`` — rank by :func:`bigram_logprob_scores` instead, so
-    the banding also penalizes scrambled word ORDER (closer to the
+    ``"bigram"`` — rank by ``ngram_logprob_scores(docs, 2)`` instead,
+    so the banding also penalizes scrambled word ORDER (closer to the
     KenLM model CCNet actually ranks with) — or ``"trigram"`` (r8,
-    :func:`trigram_logprob_scores`, the sharpest self-ranking). Band
-    semantics and scale shape are scorer-independent.
+    ``ngram_logprob_scores(docs, 3)``, the sharpest self-ranking).
+    Band semantics and scale shape are scorer-independent.
 
     ``lm_tables`` (optionally with ``table_strata``, e.g.
     ``("lang",)``): rank by NLL under a REFERENCE model instead of the
     corpus's own counts — the full CCNet recipe: per-language models
-    trained on a clean corpus (``lm_count_tables(clean, strata=...)``
-    or the lm_stream fold) score the crawl, and the banding is done
-    per language (any N-tuple of tables, scored through the order-N
-    scorer — bit-identical to the dedicated bigram/trigram scorers at
-    orders 2/3); ``scorer`` is ignored. ``short_docs`` (this path
-    only) DEFAULTS TO ``"backoff"`` — the same semantics
+    trained on a clean corpus (``ngram_count_tables(clean, N,
+    strata=...)`` or the lm_stream fold) score the crawl, and the
+    banding is done per language (any N-tuple of tables, scored
+    through :func:`ngram_logprob_against`); ``scorer`` is ignored.
+    ``short_docs`` (this path only) DEFAULTS TO ``"backoff"`` — the
+    same semantics
     :func:`~mod_reservoir_spark.pipeline.lm_model.score_under_model`
     and the curate() perplexity gate run under, so a ``max_nll_e6``
     threshold read off these buckets gates consistently (VERDICT r9
@@ -2165,10 +1677,9 @@ def perplexity_buckets(
         )
     elif scorer == "unigram":
         scores = unigram_logprob_scores(docs, text_col)
-    elif scorer == "bigram":
-        scores = bigram_logprob_scores(docs, text_col)
-    elif scorer == "trigram":
-        scores = trigram_logprob_scores(docs, text_col)
+    elif scorer in ("bigram", "trigram"):
+        order = 2 if scorer == "bigram" else 3
+        scores = ngram_logprob_scores(docs, order, text_col)
     else:
         raise ValueError(f"unknown scorer {scorer!r}")
     scores = scores.select("doc_id", "mean_nll_e6")

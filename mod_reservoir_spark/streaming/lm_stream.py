@@ -2,34 +2,40 @@
 corpus LM fresh under continuous ingest, the way the BM25 index
 (index_stream.py), the HLL/CM sketches and the minhash signature
 table are maintained. The serving use is
-:func:`~mod_reservoir_spark.pipeline.text.bigram_logprob_against`:
+:func:`~mod_reservoir_spark.pipeline.text.ngram_logprob_against`:
 rank INCOMING documents by NLL under the maintained reference counts
 (the CCNet pattern — a clean-corpus LM scoring the crawl).
 
 State contract (the ``streaming_hll`` / ``stream_text_index`` shape):
 
 - each micro-batch counts ONLY its own documents
-  (:func:`~mod_reservoir_spark.pipeline.text.lm_count_tables` over the
-  batch) and commits the two tables as immutable partitions
-  ``bigrams/batch=<id>/`` + ``unigrams/batch=<id>/``;
+  (:func:`~mod_reservoir_spark.pipeline.text.ngram_count_tables` over
+  the batch) and commits every order's table as an immutable
+  partition ``grams{k}/batch=<id>/`` (k = N..2, count column ``c``) +
+  ``unigrams/batch=<id>/``;
 - counts are ADDITIVE (corpus counts = key-wise sum of batch counts),
   so the fold is one groupBy-sum per table at read time;
 - commits stage + atomically rename, so an at-least-once REPLAY
   rewrites its own partition with identical rows (counts are a pure
   function of the batch's documents) and the fold is unchanged —
   exactly-once state from at-least-once delivery;
-- the folded tables are EXACTLY ``lm_count_tables`` over everything
-  ingested (equivalence-pinned in tests/test_windowed_streaming.py),
-  so ``bigram_logprob_against`` serves from them unchanged, and
-  self-scoring equality holds: scoring the ingested corpus against
-  the folded tables == ``bigram_logprob_scores`` over that corpus.
+- the folded tables are EXACTLY ``ngram_count_tables`` over
+  everything ingested (equivalence-pinned in
+  tests/test_windowed_streaming.py), so ``ngram_logprob_against``
+  serves from them unchanged, and self-scoring equality holds:
+  scoring the ingested corpus against the folded tables ==
+  ``ngram_logprob_scores`` over that corpus.
 
 At 100 TB: per-batch cost is counting the batch (never re-reading the
 corpus); state grows one bounded partition per batch (bounded by the
-batch's bigram vocabulary, not its size); the read-time fold is a
+batch's n-gram vocabulary, not its size); the read-time fold is a
 combinable sum on vocab keys. When partition count starts to matter,
-:func:`compact_lm_counts` folds the accumulated partitions into one —
-idempotent, same rows.
+:func:`compact_ngram_counts` folds the accumulated partitions into one
+table per order — idempotent, same rows.
+
+:func:`stream_lm_prefix` is the prefix-table face: one window-count
+table per batch instead of one per order, folded into the persisted
+model artifact (pipeline/lm_model.py).
 """
 
 from __future__ import annotations
@@ -38,139 +44,32 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from mod_reservoir_spark.pipeline.text import lm_count_tables
+from mod_reservoir_spark.pipeline.text import ngram_count_tables
 from mod_reservoir_spark.streaming.windowed import (
     DOC_SCHEMA,
     _commit_sketch_partition,
 )
 
 
-def stream_lm_counts(
-    spark: SparkSession,
-    input_dir: str,
-    checkpoint_dir: str,
+def _table_dirs(order: int) -> list[str]:
+    """State/serving directory names, in ngram_count_tables order."""
+    return [f"grams{k}" for k in range(order, 1, -1)] + ["unigrams"]
+
+
+def _commit_ngram_counts(
+    batch_df: DataFrame,
     state_dir: str,
+    batch_id: int,
+    order: int,
     text_col: str = "text",
-    schema=None,
     strata: tuple[str, ...] = (),
-):
-    """Maintain the bigram/unigram count tables under continuous JSONL
-    ingest. Returns the started streaming query; state lands under
-    ``{state_dir}/bigrams/batch=<id>/`` + ``{state_dir}/unigrams/...``
-    and is read with :func:`read_stream_lm_counts`. ``strata`` builds
-    per-stratum models (e.g. per language — pass a ``schema`` carrying
-    the stratum columns); the fold below infers its grouping keys from
-    the committed columns, so it needs no matching parameter."""
-    bigrams_root = os.path.join(state_dir, "bigrams")
-    unigrams_root = os.path.join(state_dir, "unigrams")
-
-    def process(batch_df, batch_id):
-        bigrams, unigrams = lm_count_tables(batch_df, text_col, strata)
-        _commit_sketch_partition(bigrams, bigrams_root, batch_id)
-        _commit_sketch_partition(unigrams, unigrams_root, batch_id)
-
-    docs = (
-        spark.readStream.schema(schema or DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(input_dir)
-    )
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def read_stream_lm_counts(
-    spark: SparkSession, state_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """(bigrams, unigrams) folded over every committed batch partition
-    — the exact shapes ``lm_count_tables`` returns, directly servable
-    by ``bigram_logprob_against``."""
-    raw_b = spark.read.parquet(os.path.join(state_dir, "bigrams"))
-    raw_u = spark.read.parquet(os.path.join(state_dir, "unigrams"))
-    # grouping keys inferred from the committed columns, so stratified
-    # state (extra stratum columns) folds without a matching parameter
-    bkeys = [c for c in raw_b.columns if c not in ("cb", "batch")]
-    ukeys = [c for c in raw_u.columns if c not in ("ctf", "batch")]
-    bigrams = raw_b.groupBy(*bkeys).agg(
-        F.sum("cb").cast("long").alias("cb")
-    )
-    unigrams = raw_u.groupBy(*ukeys).agg(
-        F.sum("ctf").cast("long").alias("ctf")
-    )
-    return bigrams, unigrams
-
-
-def stream_trigram_counts(
-    spark: SparkSession,
-    input_dir: str,
-    checkpoint_dir: str,
-    state_dir: str,
-    text_col: str = "text",
-    schema=None,
-    strata: tuple[str, ...] = (),
-):
-    """Order-3 face of :func:`stream_lm_counts` (VERDICT r7 Next #5's
-    streaming-fold contract one order up): per-batch
-    :func:`~mod_reservoir_spark.pipeline.text.trigram_count_tables`
-    committed under ``trigrams/`` + ``bigrams/`` + ``unigrams/``;
-    counts are additive, so the fold is one groupBy-sum per table and
-    the folded triple is exactly the one-shot tables over everything
-    ingested — directly servable by ``trigram_logprob_against``."""
-    from mod_reservoir_spark.pipeline.text import trigram_count_tables
-
-    roots = {
-        t: os.path.join(state_dir, t)
-        for t in ("trigrams", "bigrams", "unigrams")
-    }
-
-    def process(batch_df, batch_id):
-        trigrams, bigrams, unigrams = trigram_count_tables(
-            batch_df, text_col, strata
-        )
-        _commit_sketch_partition(trigrams, roots["trigrams"], batch_id)
-        _commit_sketch_partition(bigrams, roots["bigrams"], batch_id)
-        _commit_sketch_partition(unigrams, roots["unigrams"], batch_id)
-
-    docs = (
-        spark.readStream.schema(schema or DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(input_dir)
-    )
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def read_stream_trigram_counts(
-    spark: SparkSession, state_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(trigrams, bigrams, unigrams) folded over every committed batch
-    partition — the exact shapes ``trigram_count_tables`` returns."""
-    raw_t = spark.read.parquet(os.path.join(state_dir, "trigrams"))
-    tkeys = [c for c in raw_t.columns if c not in ("ct", "batch")]
-    trigrams = raw_t.groupBy(*tkeys).agg(
-        F.sum("ct").cast("long").alias("ct")
-    )
-    bigrams, unigrams = read_stream_lm_counts(spark, state_dir)
-    return trigrams, bigrams, unigrams
-
-
-def compact_lm_counts(spark: SparkSession, state_dir: str,
-                      serving_path: str) -> None:
-    """Fold the accumulated batch partitions into single tables at
-    ``serving_path`` (``bigrams/`` + ``unigrams/``) — idempotent, the
-    same rows the read-time fold produces."""
-    bigrams, unigrams = read_stream_lm_counts(spark, state_dir)
-    bigrams.write.mode("overwrite").parquet(
-        os.path.join(serving_path, "bigrams")
-    )
-    unigrams.write.mode("overwrite").parquet(
-        os.path.join(serving_path, "unigrams")
-    )
+) -> None:
+    """Count one micro-batch and commit every table as its immutable
+    ``batch=<id>`` partition — the per-batch step of
+    :func:`stream_ngram_counts` (a replay rewrites the same rows)."""
+    tables = ngram_count_tables(batch_df, order, text_col, strata)
+    for tbl, d in zip(tables, _table_dirs(order)):
+        _commit_sketch_partition(tbl, os.path.join(state_dir, d), batch_id)
 
 
 def stream_ngram_counts(
@@ -183,24 +82,21 @@ def stream_ngram_counts(
     schema=None,
     strata: tuple[str, ...] = (),
 ):
-    """Order-N face of :func:`stream_lm_counts`: per-batch
+    """Maintain the order-N count tables under continuous JSONL
+    ingest. Returns the started streaming query; per-batch
     :func:`~mod_reservoir_spark.pipeline.text.ngram_count_tables`
-    committed under ``grams{N}/ .. grams2/ unigrams/``; counts are
-    additive at every order, so the fold is one groupBy-sum per table
-    and the folded list is exactly the one-shot tables over everything
-    ingested — directly servable by ``ngram_logprob_against`` (and by
-    the funnel gates as the N-tuple ``lm_tables``)."""
-    from mod_reservoir_spark.pipeline.text import ngram_count_tables
-
-    roots = [
-        os.path.join(state_dir, f"grams{k}")
-        for k in range(order, 1, -1)
-    ] + [os.path.join(state_dir, "unigrams")]
+    land under ``{state_dir}/grams{N}/ .. grams2/ unigrams/`` and are
+    read with :func:`read_stream_ngram_counts`; the folded list is
+    directly servable by ``ngram_logprob_against`` (and by the funnel
+    gates as the N-tuple ``lm_tables``). ``strata`` builds
+    per-stratum models (e.g. per language — pass a ``schema`` carrying
+    the stratum columns); the fold infers its grouping keys from the
+    committed columns, so it needs no matching parameter."""
 
     def process(batch_df, batch_id):
-        tables = ngram_count_tables(batch_df, order, text_col, strata)
-        for tbl, root in zip(tables, roots):
-            _commit_sketch_partition(tbl, root, batch_id)
+        _commit_ngram_counts(
+            batch_df, state_dir, batch_id, order, text_col, strata
+        )
 
     docs = (
         spark.readStream.schema(schema or DOC_SCHEMA)
@@ -221,41 +117,29 @@ def read_stream_ngram_counts(
     committed batch partition — the exact shapes
     ``ngram_count_tables`` returns."""
     out: list[DataFrame] = []
-    for k in range(order, 1, -1):
-        raw = spark.read.parquet(os.path.join(state_dir, f"grams{k}"))
-        keys = [c for c in raw.columns if c not in ("c", "batch")]
+    for d in _table_dirs(order):
+        raw = spark.read.parquet(os.path.join(state_dir, d))
+        count = "ctf" if d == "unigrams" else "c"
+        # grouping keys inferred from the committed columns, so
+        # stratified state (extra stratum columns) folds without a
+        # matching parameter
+        keys = [c for c in raw.columns if c not in (count, "batch")]
         out.append(
-            raw.groupBy(*keys).agg(F.sum("c").cast("long").alias("c"))
+            raw.groupBy(*keys).agg(F.sum(count).cast("long").alias(count))
         )
-    raw_u = spark.read.parquet(os.path.join(state_dir, "unigrams"))
-    ukeys = [c for c in raw_u.columns if c not in ("ctf", "batch")]
-    out.append(
-        raw_u.groupBy(*ukeys).agg(
-            F.sum("ctf").cast("long").alias("ctf")
-        )
-    )
     return out
 
 
-def compact_trigram_counts(spark: SparkSession, state_dir: str,
-                           serving_path: str) -> None:
-    """Order-3 sibling of :func:`compact_lm_counts`: fold the
-    accumulated ``trigrams/`` + ``bigrams/`` + ``unigrams/`` batch
-    partitions into single serving tables — idempotent, the same rows
-    the read-time fold produces, directly loadable as curate()'s
-    3-tuple ``lm_tables``."""
-    trigrams, bigrams, unigrams = read_stream_trigram_counts(
-        spark, state_dir
-    )
-    trigrams.write.mode("overwrite").parquet(
-        os.path.join(serving_path, "trigrams")
-    )
-    bigrams.write.mode("overwrite").parquet(
-        os.path.join(serving_path, "bigrams")
-    )
-    unigrams.write.mode("overwrite").parquet(
-        os.path.join(serving_path, "unigrams")
-    )
+def compact_ngram_counts(
+    spark: SparkSession, state_dir: str, order: int, serving_path: str
+) -> None:
+    """Fold the accumulated batch partitions into single tables at
+    ``serving_path`` (``grams{N}/ .. grams2/ unigrams/``) — idempotent,
+    the same rows the read-time fold produces, directly loadable as
+    curate()'s N-tuple ``lm_tables``."""
+    tables = read_stream_ngram_counts(spark, state_dir, order)
+    for tbl, d in zip(tables, _table_dirs(order)):
+        tbl.write.mode("overwrite").parquet(os.path.join(serving_path, d))
 
 
 def stream_lm_prefix(

@@ -301,14 +301,14 @@ def test_curate_perplexity_stage(spark, corpus):
     sees only perplexity survivors; lm_tables without a threshold
     raises; the default ledger is untouched."""
     from mod_reservoir_spark.pipeline.text import (
-        bigram_logprob_against,
-        lm_count_tables,
+        ngram_count_tables,
+        ngram_logprob_against,
     )
 
-    tables = lm_count_tables(corpus)
+    tables = ngram_count_tables(corpus, 2)
     scores = {
         r.doc_id: r.mean_nll_e6
-        for r in bigram_logprob_against(corpus, *tables).collect()
+        for r in ngram_logprob_against(corpus, tables).collect()
     }
     # pick a threshold that splits the quality survivors
     default = curate(corpus, near_kwargs=dict(NEAR))
@@ -413,9 +413,9 @@ def test_curate_materialize_identical_and_scan_free(spark, corpus, bench_docs):
     gate and both decontamination passes), and the DEFAULT plan reads
     checkpoints — zero source re-scans, while the lazy plan re-derives
     its source dozens of times."""
-    from mod_reservoir_spark.pipeline.text import lm_count_tables
+    from mod_reservoir_spark.pipeline.text import ngram_count_tables
 
-    tables = lm_count_tables(corpus)
+    tables = ngram_count_tables(corpus, 2)
     kw = dict(
         benchmark=bench_docs,
         near_kwargs=dict(NEAR),
@@ -478,14 +478,14 @@ def test_curate_trigram_gate(spark, corpus):
     scorer: drop set equals the hand-computed trigram-NLL cut among
     quality survivors, attribution and downstream stages unchanged."""
     from mod_reservoir_spark.pipeline.text import (
-        trigram_count_tables,
-        trigram_logprob_against,
+        ngram_count_tables,
+        ngram_logprob_against,
     )
 
-    tables = trigram_count_tables(corpus)
+    tables = ngram_count_tables(corpus, 3)
     scores = {
         r.doc_id: r.mean_nll_e6
-        for r in trigram_logprob_against(corpus, *tables).collect()
+        for r in ngram_logprob_against(corpus, tables).collect()
     }
     default = curate(corpus, near_kwargs=dict(NEAR))
     d = {r.doc_id: r.drop_stage for r in default.collect()}
@@ -539,7 +539,7 @@ def test_curate_perplexity_gate_short_docs(spark):
     in-vocab short doc is genuinely scored and survives; a 0-token doc
     (n_ngrams=0 even under backoff) drops explicitly instead of
     passing. The CCNet recipe (KenLM) never exempts short docs."""
-    from mod_reservoir_spark.pipeline.text import trigram_count_tables
+    from mod_reservoir_spark.pipeline.text import ngram_count_tables
 
     ref = spark.createDataFrame(
         [
@@ -548,7 +548,7 @@ def test_curate_perplexity_gate_short_docs(spark):
         ],
         "doc_id long, text string",
     )
-    tables = trigram_count_tables(ref)  # order 3
+    tables = ngram_count_tables(ref, 3)
     corpus = spark.createDataFrame(
         [
             (0, "the glacier moraine retreats slowly each year"),

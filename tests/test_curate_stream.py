@@ -381,8 +381,8 @@ def test_streaming_curate_perplexity_gate_equals_batch(spark, tmp_path):
 
     from mod_reservoir_spark.pipeline.curate import curate
     from mod_reservoir_spark.pipeline.text import (
-        bigram_logprob_against,
-        lm_count_tables,
+        ngram_count_tables,
+        ngram_logprob_against,
     )
     from mod_reservoir_spark.streaming.curate_stream import (
         read_curate_state,
@@ -393,10 +393,10 @@ def test_streaming_curate_perplexity_gate_equals_batch(spark, tmp_path):
     docs = spark.createDataFrame(all_rows, "doc_id long, text string")
     # reference LM: the 'a'-family docs, so unrelated docs score high
     reference = docs.filter(F.col("doc_id").isin(0, 1, 4, 5))
-    tables = lm_count_tables(reference)
+    tables = ngram_count_tables(reference, 2)
     scores = {
         r.doc_id: r.mean_nll_e6
-        for r in bigram_logprob_against(docs, *tables).collect()
+        for r in ngram_logprob_against(docs, tables).collect()
     }
     # threshold between the reference-family scores and the rest
     cut = scores[0] + 1
@@ -605,7 +605,10 @@ def test_streaming_curate_per_language_gate_equals_batch(spark, tmp_path):
     from pyspark.sql import types as T
 
     from mod_reservoir_spark.pipeline.curate import curate
-    from mod_reservoir_spark.pipeline.text import lm_count_tables
+    from mod_reservoir_spark.pipeline.text import (
+        ngram_count_tables,
+        ngram_logprob_against,
+    )
     from mod_reservoir_spark.streaming.curate_stream import (
         read_curate_state,
         streaming_curate,
@@ -622,14 +625,12 @@ def test_streaming_curate_per_language_gate_equals_batch(spark, tmp_path):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, lang string, text string")
     ref = docs.filter(F.col("doc_id").isin(0, 2))
-    tables = lm_count_tables(ref, strata=("lang",))
+    tables = ngram_count_tables(ref, 2, strata=("lang",))
     # threshold between each language's fluent and permuted scores
-    from mod_reservoir_spark.pipeline.text import bigram_logprob_against
-
     s = {
         r.doc_id: r.mean_nll_e6
-        for r in bigram_logprob_against(
-            docs, *tables, strata=("lang",)
+        for r in ngram_logprob_against(
+            docs, tables, strata=("lang",)
         ).collect()
     }
     cut = max(s[0], s[2]) + 1

@@ -87,13 +87,13 @@ def test_score_under_model_equals_fresh_tables(spark, tmp_path):
         r.doc_id: r.mean_nll_e6
         for r in score_under_model(crawl_l, spark, path2).collect()
     }
-    from mod_reservoir_spark.pipeline.text import lm_count_tables
+    from mod_reservoir_spark.pipeline.text import ngram_count_tables
 
     want2 = {
         r.doc_id: r.mean_nll_e6
         for r in ngram_logprob_against(
             crawl_l,
-            list(lm_count_tables(clean_l, strata=("lang",))),
+            ngram_count_tables(clean_l, 2, strata=("lang",)),
             strata=("lang",),
             short_docs="backoff",
         ).collect()

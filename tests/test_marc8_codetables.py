@@ -18,6 +18,7 @@ import os
 import pytest
 
 from mod_reservoir_spark.functions import marc8
+from tests.marc_helpers import build_iso2709
 
 FIXTURE = os.path.join(os.path.dirname(__file__), "fixtures", "codetables-mini.xml")
 
@@ -99,34 +100,13 @@ def test_env_var_lazy_load(monkeypatch):
         marc8._ENV_TABLES_LOADED = False
 
 
-def _build_iso2709(fields):
-    """Author a minimal MARC-8 ISO2709 record (leader[9]=' ')."""
-    body = b""
-    directory = b""
-    for tag, data in fields:
-        data = data + b"\x1e"
-        directory += f"{tag}{len(data):04d}{len(body):05d}".encode()
-        body += data
-    directory += b"\x1e"
-    base = 24 + len(directory)
-    total = base + len(body) + 1
-    leader = (
-        f"{total:05d}".encode()
-        + b"nam  22"
-        + f"{base:05d}".encode()
-        + b"   4500"
-    )
-    assert len(leader) == 24 and leader[9:10] == b" "
-    return leader + directory + body + b"\x1d"
-
-
 def test_cjk_record_through_iso2709_pipeline(loaded_tables):
     """A MARC-8 record with an EACC title decodes end-to-end through
     the ISO2709 → MARC-in-JSON path (leader[9] rewritten to 'a', CJK
     characters materialized in the 245$a subfield)."""
     from mod_reservoir_spark.sources.iso2709 import parse_iso2709
 
-    raw = _build_iso2709(
+    raw = build_iso2709(
         [
             ("001", b"cjk1"),
             ("245", b"10\x1faTitle \x1b$1\x21\x23\x20\x21\x23\x21\x1b(B!"),

@@ -522,9 +522,9 @@ def test_trigram_scorer_plan(docs):
     (r13 batch 8 — partition keys are w* table columns, bounded by
     vocabulary branching); a window over the per-doc occurrence frame
     (partitioned by doc_id or unpartitioned) stays banned."""
-    from mod_reservoir_spark.pipeline.text import trigram_logprob_scores
+    from mod_reservoir_spark.pipeline.text import ngram_logprob_scores
 
-    p = plan(trigram_logprob_scores(docs), mode="simple")
+    p = plan(ngram_logprob_scores(docs, 3), mode="simple")
     for ln in p.splitlines():
         if "windowspecdefinition" in ln:
             assert "windowspecdefinition(w1" in ln, ln

@@ -261,7 +261,7 @@ def test_remove_duplicate_spans_matches_python_reference(spark):
 def test_bigram_jm_arithmetic_matches_python_reference(spark):
     """Property: over random small corpora, the distributed
     Jelinek-Mercer bigram scorer matches an independent pure-Python
-    implementation — exact n_bigrams, mean NLL within 1 micro-nat
+    implementation — exact bigram counts, mean NLL within 1 micro-nat
     (float summation order differs between the engines, so the 1e6
     rounding may land one off at half-way boundaries)."""
     import math
@@ -270,7 +270,7 @@ def test_bigram_jm_arithmetic_matches_python_reference(spark):
     from hypothesis import given as _given, settings as _settings
     from hypothesis import strategies as _st
 
-    from mod_reservoir_spark.pipeline.text import bigram_logprob_scores
+    from mod_reservoir_spark.pipeline.text import ngram_logprob_scores
 
     def ref_scores(rows, lam=0.8):
         toks = {i: t.split() for i, t in rows}
@@ -310,9 +310,9 @@ def test_bigram_jm_arithmetic_matches_python_reference(spark):
     def run(texts):
         rows = list(enumerate(texts))
         got = {
-            r.doc_id: (r.n_bigrams, r.mean_nll_e6)
-            for r in bigram_logprob_scores(
-                spark.createDataFrame(rows, "doc_id long, text string")
+            r.doc_id: (r.n_ngrams, r.mean_nll_e6)
+            for r in ngram_logprob_scores(
+                spark.createDataFrame(rows, "doc_id long, text string"), 2
             ).collect()
         }
         want = ref_scores(rows)
@@ -333,7 +333,7 @@ def test_trigram_logprob_matches_python_reference(spark):
 
     from hypothesis import given, settings, strategies as st
 
-    from mod_reservoir_spark.pipeline.text import trigram_logprob_scores
+    from mod_reservoir_spark.pipeline.text import ngram_logprob_scores
 
     word = st.sampled_from(["a", "b", "c", "dd", "ee"])
     doc = st.lists(word, min_size=0, max_size=6).map(" ".join)
@@ -345,8 +345,8 @@ def test_trigram_logprob_matches_python_reference(spark):
             list(enumerate(texts)), "doc_id long, text string"
         )
         got = {
-            r.doc_id: (r.n_trigrams, r.mean_nll_e6)
-            for r in trigram_logprob_scores(docs).collect()
+            r.doc_id: (r.n_ngrams, r.mean_nll_e6)
+            for r in ngram_logprob_scores(docs, 3).collect()
         }
         toks = {i: t.split() if t else [] for i, t in enumerate(texts)}
         ct: dict = {}

@@ -5,6 +5,8 @@ deterministic."""
 
 import json
 
+import pytest
+
 from mod_reservoir_spark.streaming.windowed import (
     streaming_hourly_rollup,
     streaming_sessionize,
@@ -554,108 +556,22 @@ def test_streaming_hll_grouped(spark, tmp_path):
     assert empty.columns == ["lang", "bucket", "r"] and empty.count() == 0
 
 
-def test_stream_lm_counts_equivalence_replay_and_serving(spark, tmp_path):
-    """The streamed LM count state folded over batches must EXACTLY
-    equal lm_count_tables over everything ingested; a replayed batch
-    (at-least-once delivery) rewrites its own partition and changes
-    nothing; scoring the ingested corpus against the folded tables
-    equals self-scoring (bigram_logprob_scores); compaction preserves
-    the rows."""
-    import os
-
-    from mod_reservoir_spark.pipeline.text import (
-        bigram_logprob_against,
-        bigram_logprob_scores,
-        lm_count_tables,
-    )
-    from mod_reservoir_spark.streaming.lm_stream import (
-        compact_lm_counts,
-        read_stream_lm_counts,
-        stream_lm_counts,
-    )
-
-    docs_all = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id", "text")
-    rows = sorted(
-        ((r.doc_id, r.text) for r in docs_all.collect()), key=lambda t: t[0]
-    )
-    batches = [rows[0:20], rows[20:35], rows[35:]]
-
-    indir = tmp_path / "docs"
-    indir.mkdir()
-    state = str(tmp_path / "lm_state")
-    q = stream_lm_counts(spark, str(indir), str(tmp_path / "ckpt"), state)
-    try:
-        for bi, batch in enumerate(batches):
-            with open(indir / f"b{bi}.jsonl", "w") as f:
-                for i, t in batch:
-                    f.write(json.dumps({"doc_id": i, "text": t}) + "\n")
-            q.processAllAvailable()
-    finally:
-        q.stop()
-
-    want_b, want_u = lm_count_tables(docs_all)
-    want_bigrams = {tuple(r) for r in want_b.collect()}
-    want_unigrams = {tuple(r) for r in want_u.collect()}
-
-    def check_state():
-        got_b, got_u = read_stream_lm_counts(spark, state)
-        assert {tuple(r) for r in got_b.collect()} == want_bigrams
-        assert {tuple(r) for r in got_u.collect()} == want_unigrams
-
-    check_state()
-
-    # REPLAY: at-least-once redelivery of batch 1 — identical rows,
-    # fold unchanged
-    from mod_reservoir_spark.streaming.windowed import (
-        _commit_sketch_partition,
-    )
-
-    replay_df = spark.createDataFrame(batches[1], "doc_id long, text string")
-    rb, ru = lm_count_tables(replay_df)
-    _commit_sketch_partition(rb, os.path.join(state, "bigrams"), 1)
-    _commit_sketch_partition(ru, os.path.join(state, "unigrams"), 1)
-    check_state()
-
-    # SERVING: scoring the ingested corpus against the folded tables
-    # IS self-scoring (neither OOV guard fires on the self path)
-    got_b, got_u = read_stream_lm_counts(spark, state)
-    against = {
-        r.doc_id: (r.n_bigrams, r.mean_nll_e6)
-        for r in bigram_logprob_against(docs_all, got_b, got_u).collect()
-    }
-    self_scored = {
-        r.doc_id: (r.n_bigrams, r.mean_nll_e6)
-        for r in bigram_logprob_scores(docs_all).collect()
-    }
-    assert against == self_scored
-
-    # COMPACTION: one table per kind, same rows
-    serving = str(tmp_path / "lm_serving")
-    compact_lm_counts(spark, state, serving)
-    cb = spark.read.parquet(os.path.join(serving, "bigrams"))
-    cu = spark.read.parquet(os.path.join(serving, "unigrams"))
-    assert {tuple(r) for r in cb.collect()} == want_bigrams
-    assert {tuple(r) for r in cu.collect()} == want_unigrams
-
-
-def test_bigram_logprob_against_oov_contract(spark):
-    """Scoring against a FOREIGN corpus LM: unseen bigrams fall back
-    to unigram mass; unseen unigrams hit the oov floor (finite NLL,
-    worst scores); seen text scores the same as under self-scoring
-    arithmetic."""
+def test_ngram_logprob_against_oov_contract(spark):
+    """Scoring against a FOREIGN corpus LM (order 2): unseen bigrams
+    fall back to unigram mass; unseen unigrams hit the oov floor
+    (finite NLL, worst scores); seen text scores the same as under
+    self-scoring arithmetic."""
     import math
 
     from mod_reservoir_spark.pipeline.text import (
-        bigram_logprob_against,
-        lm_count_tables,
+        ngram_count_tables,
+        ngram_logprob_against,
     )
 
     reference = spark.createDataFrame(
         [(0, "a b"), (1, "a b"), (2, "a c")], "doc_id long, text string"
     )
-    bigrams, unigrams = lm_count_tables(reference)
+    tables = ngram_count_tables(reference, 2)
     incoming = spark.createDataFrame(
         [
             (10, "a b"),        # fully in-vocabulary
@@ -665,10 +581,8 @@ def test_bigram_logprob_against_oov_contract(spark):
         "doc_id long, text string",
     )
     got = {
-        r.doc_id: (r.n_bigrams, r.mean_nll_e6)
-        for r in bigram_logprob_against(
-            incoming, bigrams, unigrams
-        ).collect()
+        r.doc_id: (r.n_ngrams, r.mean_nll_e6)
+        for r in ngram_logprob_against(incoming, tables).collect()
     }
     # reference: ctf a=3 b=2 c=1, T=7(ref tokens incl 'solo'? no: 6);
     lam = 0.8
@@ -681,64 +595,6 @@ def test_bigram_logprob_against_oov_contract(spark):
     assert got[10] == (1, round(-math.log(p_ab) * 1e6))
     assert got[11] == (1, round(-math.log(p_ba) * 1e6))
     assert got[12] == (1, round(-math.log(p_oov) * 1e6))
-
-
-def test_stream_lm_counts_stratified_fold(spark, tmp_path):
-    """Stratified streaming state (per-language models): the inferred
-    fold keys include the stratum column, and the folded tables equal
-    lm_count_tables(strata=...) over everything ingested."""
-    import os
-
-    from pyspark.sql import types as T
-
-    from mod_reservoir_spark.pipeline.text import lm_count_tables
-    from mod_reservoir_spark.streaming.lm_stream import (
-        read_stream_lm_counts,
-        stream_lm_counts,
-    )
-
-    rows = [
-        (0, "en", "the cat sat"),
-        (1, "en", "the cat ran"),
-        (2, "de", "die katze sass"),
-        (3, "de", "die katze lief"),
-    ]
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    indir = tmp_path / "docs"
-    indir.mkdir()
-    state = str(tmp_path / "lm_state")
-    q = stream_lm_counts(
-        spark, str(indir), str(tmp_path / "ckpt"), state,
-        schema=schema, strata=("lang",),
-    )
-    try:
-        for bi, batch in enumerate((rows[:2], rows[2:])):
-            with open(indir / f"b{bi}.jsonl", "w") as f:
-                for i, lang, t in batch:
-                    f.write(
-                        json.dumps({"doc_id": i, "lang": lang, "text": t})
-                        + "\n"
-                    )
-            q.processAllAvailable()
-    finally:
-        q.stop()
-
-    docs = spark.createDataFrame(rows, schema)
-    want_b, want_u = lm_count_tables(docs, strata=("lang",))
-    got_b, got_u = read_stream_lm_counts(spark, state)
-    assert set(got_b.columns) == set(want_b.columns)
-    assert {tuple(r) for r in got_b.select(*want_b.columns).collect()} == {
-        tuple(r) for r in want_b.collect()
-    }
-    assert {tuple(r) for r in got_u.select(*want_u.columns).collect()} == {
-        tuple(r) for r in want_u.collect()
-    }
 
 
 def test_streaming_semantic_dedup_equivalence_and_replay(spark, tmp_path):
@@ -1096,143 +952,171 @@ def test_new_state_readers_empty_before_first_commit(spark, tmp_path):
     assert m.columns == ["vec_id", "cell", "v"]
 
 
-def test_stream_trigram_counts_fold_and_serving(spark, tmp_path):
-    """The order-3 streaming face: folded trigram/bigram/unigram state
-    equals trigram_count_tables over everything ingested; a replayed
-    batch changes nothing; scoring against the folded triple equals
-    self-scoring."""
-    import os
-
-    from mod_reservoir_spark.pipeline.text import (
-        trigram_count_tables,
-        trigram_logprob_against,
-        trigram_logprob_scores,
-    )
-    from mod_reservoir_spark.streaming.lm_stream import (
-        read_stream_trigram_counts,
-        stream_trigram_counts,
-    )
-    from mod_reservoir_spark.streaming.windowed import (
-        _commit_sketch_partition,
-    )
-
-    docs_all = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id", "text")
-    rows = sorted(
-        ((r.doc_id, r.text) for r in docs_all.collect()),
-        key=lambda t: t[0],
-    )
-    batches = [rows[0:20], rows[20:35], rows[35:]]
-
-    indir = tmp_path / "docs"
-    indir.mkdir()
-    state = str(tmp_path / "tri_state")
-    q = stream_trigram_counts(
-        spark, str(indir), str(tmp_path / "ckpt"), state
-    )
-    try:
-        for bi, batch in enumerate(batches):
-            with open(indir / f"b{bi}.jsonl", "w") as f:
-                for i, t in batch:
-                    f.write(json.dumps({"doc_id": i, "text": t}) + "\n")
-            q.processAllAvailable()
-    finally:
-        q.stop()
-
-    want = trigram_count_tables(docs_all)
-    want_sets = [{tuple(r) for r in t.collect()} for t in want]
-
-    def check_state():
-        got = read_stream_trigram_counts(spark, state)
-        for g, w in zip(got, want_sets):
-            assert {tuple(r) for r in g.collect()} == w
-
-    check_state()
-
-    # REPLAY batch 1: identical rows, fold unchanged
-    replay_df = spark.createDataFrame(
-        batches[1], "doc_id long, text string"
-    )
-    rt, rb, ru = trigram_count_tables(replay_df)
-    _commit_sketch_partition(rt, os.path.join(state, "trigrams"), 1)
-    _commit_sketch_partition(rb, os.path.join(state, "bigrams"), 1)
-    _commit_sketch_partition(ru, os.path.join(state, "unigrams"), 1)
-    check_state()
-
-    # SERVING: against the folded triple == self-scoring
-    got = read_stream_trigram_counts(spark, state)
-    against = {
-        r.doc_id: (r.n_trigrams, r.mean_nll_e6)
-        for r in trigram_logprob_against(docs_all, *got).collect()
-    }
-    self_scored = {
-        r.doc_id: (r.n_trigrams, r.mean_nll_e6)
-        for r in trigram_logprob_scores(docs_all).collect()
-    }
-    assert against == self_scored
-
-    # COMPACTION: single serving tables, same rows
-    from mod_reservoir_spark.streaming.lm_stream import (
-        compact_trigram_counts,
-    )
-
-    serving = str(tmp_path / "tri_serving")
-    compact_trigram_counts(spark, state, serving)
-    for name, want in zip(("trigrams", "bigrams", "unigrams"), want_sets):
-        folded = spark.read.parquet(os.path.join(serving, name))
-        assert {tuple(r) for r in folded.collect()} == want
+@pytest.mark.parametrize(
+    ("order", "strata"),
+    [(2, ("lang",)), (3, ("lang",)), (4, ())],
+    ids=["2", "3", "4"],
+)
+def test_stream_ngram_counts_fold_and_serving(spark, tmp_path, order, strata):
+    """The streamed order-N count state folded over batches must
+    EXACTLY equal ngram_count_tables over everything ingested (at
+    orders 2/3 with per-language strata: the fold infers the stratum
+    keys from the committed columns); a replayed batch (at-least-once
+    delivery) rewrites its own partition and changes nothing; scoring
+    the ingested corpus against the folded tables equals self-scoring
+    (ngram_logprob_scores); compaction preserves the rows."""
+    _check_stream_ngram_counts(spark, tmp_path, order, strata)
 
 
-def test_stream_ngram_counts_fold_and_serving(spark, tmp_path):
-    """The order-N streaming face at N=4: folded tables equal
-    ngram_count_tables over everything ingested; serving against the
-    fold equals self-scoring."""
-    from mod_reservoir_spark.pipeline.text import (
-        ngram_count_tables,
-        ngram_logprob_against,
-    )
+def test_stream_lm_counts_equivalence_replay_and_serving(spark, tmp_path):
+    """The bigram LM without strata: the same fold / replay / serving /
+    compaction contract as the order-parametrized test."""
+    _check_stream_ngram_counts(spark, tmp_path, 2, ())
+
+
+def test_stream_lm_counts_stratified_fold(spark, tmp_path):
+    """Stratified bigram state (per-language models): the inferred
+    fold keys include the stratum column, and the folded tables equal
+    ngram_count_tables(strata=...) over everything ingested."""
+    from pyspark.sql import types as T
+
+    from mod_reservoir_spark.pipeline.text import ngram_count_tables
     from mod_reservoir_spark.streaming.lm_stream import (
         read_stream_ngram_counts,
         stream_ngram_counts,
     )
 
+    rows = [
+        (0, "en", "the cat sat"),
+        (1, "en", "the cat ran"),
+        (2, "de", "die katze sass"),
+        (3, "de", "die katze lief"),
+    ]
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("lang", T.StringType()),
+            T.StructField("text", T.StringType()),
+        ]
+    )
+    indir = tmp_path / "docs"
+    indir.mkdir()
+    state = str(tmp_path / "lm_state")
+    q = stream_ngram_counts(
+        spark, str(indir), str(tmp_path / "ckpt"), state, order=2,
+        schema=schema, strata=("lang",),
+    )
+    try:
+        for bi, batch in enumerate((rows[:2], rows[2:])):
+            with open(indir / f"b{bi}.jsonl", "w") as f:
+                for i, lang, t in batch:
+                    f.write(
+                        json.dumps({"doc_id": i, "lang": lang, "text": t})
+                        + "\n"
+                    )
+            q.processAllAvailable()
+    finally:
+        q.stop()
+
+    docs = spark.createDataFrame(rows, schema)
+    want = ngram_count_tables(docs, 2, strata=("lang",))
+    got = read_stream_ngram_counts(spark, state, 2)
+    assert len(got) == len(want) == 2
+    for g, w in zip(got, want):
+        assert set(g.columns) == set(w.columns)
+        assert {tuple(r) for r in g.select(*w.columns).collect()} == {
+            tuple(r) for r in w.collect()
+        }
+
+
+def _check_stream_ngram_counts(spark, tmp_path, order, strata):
+    import os
+
+    from pyspark.sql import types as T
+
+    from mod_reservoir_spark.pipeline.text import (
+        ngram_count_tables,
+        ngram_logprob_against,
+        ngram_logprob_scores,
+    )
+    from mod_reservoir_spark.streaming.lm_stream import (
+        _commit_ngram_counts,
+        compact_ngram_counts,
+        read_stream_ngram_counts,
+        stream_ngram_counts,
+    )
+
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType()),
+            *[T.StructField(c, T.StringType()) for c in strata],
+            T.StructField("text", T.StringType()),
+        ]
+    )
     docs_all = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id", "text")
+    ).select(*schema.names)
     rows = sorted(
-        ((r.doc_id, r.text) for r in docs_all.collect()),
-        key=lambda t: t[0],
+        (tuple(r) for r in docs_all.collect()), key=lambda t: t[0]
     )
-    batches = [rows[0:25], rows[25:]]
+    batches = [rows[0:20], rows[20:35], rows[35:]]
 
     indir = tmp_path / "docs"
     indir.mkdir()
     state = str(tmp_path / "ng_state")
     q = stream_ngram_counts(
-        spark, str(indir), str(tmp_path / "ckpt"), state, order=4
+        spark, str(indir), str(tmp_path / "ckpt"), state, order=order,
+        schema=schema, strata=strata,
     )
     try:
         for bi, batch in enumerate(batches):
             with open(indir / f"b{bi}.jsonl", "w") as f:
-                for i, t in batch:
-                    f.write(json.dumps({"doc_id": i, "text": t}) + "\n")
+                for r in batch:
+                    f.write(json.dumps(dict(zip(schema.names, r))) + "\n")
             q.processAllAvailable()
     finally:
         q.stop()
 
-    want = ngram_count_tables(docs_all, 4)
-    got = read_stream_ngram_counts(spark, state, 4)
-    for g, w in zip(got, want):
-        assert {tuple(r) for r in g.collect()} == {
-            tuple(r) for r in w.collect()
-        }
+    want = ngram_count_tables(docs_all, order, strata=strata)
+    want_sets = [
+        {tuple(r) for r in t.select(*sorted(t.columns)).collect()}
+        for t in want
+    ]
+
+    def check(tables):
+        assert len(tables) == len(want_sets)
+        for g, w in zip(tables, want_sets):
+            assert {
+                tuple(r) for r in g.select(*sorted(g.columns)).collect()
+            } == w
+
+    check(read_stream_ngram_counts(spark, state, order))
+
+    # REPLAY: at-least-once redelivery of batch 1 — identical rows,
+    # fold unchanged
+    replay_df = spark.createDataFrame(batches[1], schema)
+    _commit_ngram_counts(replay_df, state, 1, order, strata=strata)
+    got = read_stream_ngram_counts(spark, state, order)
+    check(got)
+
+    # SERVING: scoring the ingested corpus against the folded tables
+    # IS self-scoring (neither OOV guard fires on the self path)
     against = {
         r.doc_id: (r.n_ngrams, r.mean_nll_e6)
-        for r in ngram_logprob_against(docs_all, got).collect()
+        for r in ngram_logprob_against(
+            docs_all, got, strata=strata
+        ).collect()
     }
     self_scored = {
         r.doc_id: (r.n_ngrams, r.mean_nll_e6)
-        for r in ngram_logprob_against(docs_all, want).collect()
+        for r in ngram_logprob_scores(
+            docs_all, order, strata=strata
+        ).collect()
     }
     assert against == self_scored
+
+    # COMPACTION: one table per order, same rows
+    serving = str(tmp_path / "ng_serving")
+    compact_ngram_counts(spark, state, order, serving)
+    dirs = [f"grams{k}" for k in range(order, 1, -1)] + ["unigrams"]
+    check([spark.read.parquet(os.path.join(serving, d)) for d in dirs])
