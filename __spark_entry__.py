@@ -1960,9 +1960,7 @@ def q_lm_fixed_ref(spark, sf_dir):
     from mod_reservoir_spark.pipeline.lm_model import build_lm_prefix
     from mod_reservoir_spark.pipeline.lm_model import score_under_model
     from mod_reservoir_spark.streaming.lm_stream import fold_to_model
-    from mod_reservoir_spark.streaming.windowed import (
-        _commit_sketch_partition,
-    )
+    from mod_reservoir_spark.streaming.state import commit
 
     docs = _t(spark, sf_dir, "documents")
     model = _LM_FIXED_REF_CACHE.get(sf_dir)
@@ -1973,7 +1971,7 @@ def q_lm_fixed_ref(spark, sf_dir):
             "doc_id", "text"
         )
         for b in range(2):
-            _commit_sketch_partition(
+            commit(
                 build_lm_prefix(
                     train.filter(F.col("doc_id") % 4 == 2 * b), 3
                 ),

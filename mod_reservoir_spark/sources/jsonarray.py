@@ -22,18 +22,8 @@ import json
 from collections.abc import Iterator
 
 from mod_reservoir_spark.functions.marc import is_delete, local_id
+from mod_reservoir_spark.sources.iso2709 import _maybe_gunzip
 
-
-
-def _maybe_gunzip(path: str, data: bytes) -> bytes:
-    """binaryFile does not decompress; the reference accepts gzip input
-    (AsyncCodec.java:22-59, HTTP decompression MainVerticle.java:40-41).
-    Sniff by suffix or magic bytes."""
-    if path.endswith(".gz") or data[:2] == b"\x1f\x8b":
-        import gzip
-
-        return gzip.decompress(data)
-    return data
 
 def _record_payload(rec: dict) -> dict:
     payload = {}

@@ -18,6 +18,8 @@ import json
 import re
 from collections.abc import Iterator
 
+from mod_reservoir_spark.sources.iso2709 import _maybe_gunzip
+
 MARC_NS = "{http://www.loc.gov/MARC21/slim}"
 
 # XML 1.0 valid char ranges (outside → replaced by U+FFFD)
@@ -28,16 +30,6 @@ _BAD_ENTITY = re.compile(rb"&(?!(?:[a-zA-Z][a-zA-Z0-9]*|#[0-9]+|#x[0-9a-fA-F]+);
 _CHAR_REF = re.compile(rb"&#(x[0-9a-fA-F]+|[0-9]+);")
 
 
-
-def _maybe_gunzip(path: str, data: bytes) -> bytes:
-    """binaryFile does not decompress; the reference accepts gzip input
-    (AsyncCodec.java:22-59, HTTP decompression MainVerticle.java:40-41).
-    Sniff by suffix or magic bytes."""
-    if path.endswith(".gz") or data[:2] == b"\x1f\x8b":
-        import gzip
-
-        return gzip.decompress(data)
-    return data
 
 def _valid_xml_codepoint(cp: int) -> bool:
     return cp in (0x9, 0xA, 0xD) or 0x20 <= cp <= 0xD7FF or 0xE000 <= cp <= 0xFFFD or 0x10000 <= cp <= 0x10FFFF

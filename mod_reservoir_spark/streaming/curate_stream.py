@@ -3,22 +3,23 @@ dedup → near dedup → decontamination → PII scrub) running continuously
 over a document stream with MAINTAINED state — the production lifecycle
 where a corpus is curated as it is ingested, not in one offline pass.
 
-State under ``state_dir`` (per-batch hive partitions, the same
-append-only + atomic-rename contract as streaming_near_dedup):
+State tables under ``state_dir`` (format and replay contract in
+:mod:`~mod_reservoir_spark.streaming.state`; every state read is
+limited to batches before the current one):
 
-- ``fingerprints/batch=<id>/`` — (fingerprint, doc_id) of each batch's
+- ``fingerprints/`` — (fingerprint, doc_id) of each batch's
   NEW exact keepers: later batches drop any document whose fingerprint
   is already owned (first-seen wins).
-- ``urls/batch=<id>/`` — (canonical_url, doc_id) of each batch's NEW
+- ``urls/`` — (canonical_url, doc_id) of each batch's NEW
   canonical-URL owners (only when ``url_col`` is given): the
   crawl-first stage 0, same first-seen-wins contract, applied BEFORE
   quality ever reads the text.
-- ``signatures/batch=<id>/``  — (doc_id, hsh, sig) of each batch's
+- ``signatures/``  — (doc_id, hsh, sig) of each batch's
   exact survivors (INCLUDING near-dropped and contaminated ones: the
   batch funnel's pair graph contains them, so the streaming funnel's
   must too or later near-dup chains through a dropped document would
   break).
-- ``ledger/batch=<id>/``      — the per-document audit rows
+- ``ledger/``      — the per-document audit rows
   (doc_id, drop_stage, reject_reasons, text) — the streaming face of
   the batch ledger; text is PII-scrubbed for survivors, NULL otherwise.
 
@@ -47,18 +48,11 @@ tests/test_curate_stream.py:
 
 Only the keeper's identity within its component varies with order —
 exactly the freedom the batch funnel resolves by min-id instead.
-
-Replay safety: state reads keep only partitions committed BEFORE the
-current batch (``batch < batch_id`` on the hive partition column —
-a no-op for new batches), so a crash between state commit and stream
-checkpoint replays against the SAME corpus as the original run even
-for an older batch; partition writes stage + rename atomically.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -73,7 +67,8 @@ from mod_reservoir_spark.pipeline.text import (
     pii_scrub_expr,
     quality_filter,
 )
-from mod_reservoir_spark.streaming.windowed import DOC_SCHEMA
+from mod_reservoir_spark.streaming import state
+from mod_reservoir_spark.streaming.windowed import DOC_SCHEMA, _held
 
 _FP_SCHEMA = "fingerprint string, doc_id long"
 _URL_SCHEMA = "canonical_url string, doc_id long"
@@ -81,34 +76,6 @@ _SIG_SCHEMA = "doc_id long, hsh array<bigint>, sig array<bigint>"
 _LEDGER_SCHEMA = (
     "doc_id long, drop_stage string, reject_reasons string, text string"
 )
-
-
-def _commit(df: DataFrame, root: str, batch_id: int) -> None:
-    staging = os.path.join(root, f".staging-{batch_id}")
-    final = os.path.join(root, f"batch={batch_id}")
-    df.write.mode("overwrite").parquet(staging)
-    if os.path.isdir(final):  # replay rewrites its own partition
-        shutil.rmtree(final)
-    os.rename(staging, final)
-
-
-def _read_state(
-    spark: SparkSession, root: str, schema: str, exclude_batch: int | None
-) -> DataFrame:
-    cols = [f.split(" ")[0] for f in schema.split(", ")]
-    if not os.path.isdir(root) or not any(
-        e.startswith("batch=") for e in os.listdir(root)
-    ):
-        return spark.createDataFrame([], schema)
-    df = spark.read.parquet(root)
-    if exclude_batch is not None:
-        # batch < current id (not merely != ): a no-op for new batches,
-        # and an at-least-once replay of an OLDER batch sees exactly
-        # the state the original run saw — its rewritten partitions are
-        # row-identical (the ADVICE-r7 fix, applied uniformly across
-        # the streaming faces)
-        df = df.filter(F.col("batch") < exclude_batch)
-    return df.select(*cols)
 
 
 def streaming_curate(
@@ -251,17 +218,15 @@ def streaming_curate(
         # instead of leaking through NULL-propagating stage predicates
         # (and so its fingerprint md5('') matches the empty-doc one
         # only AFTER quality already rejected both).
-        batch = (
-            batch_df.filter(F.col("doc_id").isNotNull())
-            .withColumn("text", F.coalesce(F.col("text"), F.lit("")))
-            .persist()
-        )
-        try:
-            _process_batch(batch, batch_id)
-        finally:
-            batch.unpersist()
+        with _held() as hold:
+            batch = hold(
+                batch_df.filter(F.col("doc_id").isNotNull()).withColumn(
+                    "text", F.coalesce(F.col("text"), F.lit(""))
+                )
+            )
+            _process_batch(batch, batch_id, hold)
 
-    def _process_batch(batch: DataFrame, batch_id: int) -> None:
+    def _process_batch(batch: DataFrame, batch_id: int, hold) -> None:
         # optional crawl-first URL stage 0 (mirrors batch curate():
         # drop before quality; first-seen canonical owner wins)
         new_owners = None
@@ -270,8 +235,8 @@ def streaming_curate(
                 canonical_url_expr,
             )
 
-            state_urls = _read_state(
-                spark, url_root, _URL_SCHEMA, batch_id
+            state_urls = state.read(
+                spark, url_root, _URL_SCHEMA, before=batch_id
             )
             with_cu = batch.select(
                 "doc_id", canonical_url_expr(url_col).alias("_cu")
@@ -279,7 +244,7 @@ def streaming_curate(
             batch_min_u = with_cu.groupBy("_cu").agg(
                 F.min("doc_id").alias("_ukid")
             )
-            flagged_u = (
+            flagged_u = hold(
                 with_cu.join(batch_min_u, "_cu")
                 .join(
                     state_urls.select(
@@ -297,7 +262,6 @@ def streaming_curate(
                         & F.col("_uowned").isNull()
                     ).alias("_u_keep"),
                 )
-                .persist()
             )
             # NULL-canonical rows never appear in flagged_u → keep
             u = batch.select("doc_id").join(
@@ -377,12 +341,12 @@ def streaming_curate(
 
         # exact dedup: batch-min keeper per fingerprint, then drop
         # fingerprints already owned by an earlier batch
-        state_fps = _read_state(spark, fp_root, _FP_SCHEMA, batch_id)
+        state_fps = state.read(spark, fp_root, _FP_SCHEMA, before=batch_id)
         with_fp = p_surv.withColumn("_fp", fingerprint_expr("text"))
         batch_min = with_fp.groupBy("_fp").agg(
             F.min("doc_id").alias("_kid")
         )
-        flagged = (
+        flagged = hold(
             with_fp.join(batch_min, "_fp")
             .join(
                 state_fps.select(
@@ -397,203 +361,190 @@ def streaming_curate(
                 (F.col("doc_id") == F.col("_kid"))
                 & F.col("_owned").isNull(),
             )
-        ).persist()
+        )
         e_surv = flagged.filter("_e_keep").select("doc_id", "text", "_fp")
 
-        new_sigs = signature_table(
-            e_surv, num_hashes=num_hashes, shingle_n=shingle_n
-        ).persist()
-        corpus_sigs = _read_state(
-            spark, sig_root, _SIG_SCHEMA, batch_id
-        ).persist()
-        handles = [new_sigs, corpus_sigs, flagged]
-        if url_col is not None:
-            handles.append(flagged_u)
-        try:
-            pairs = incremental_pairs_from_sigs(
+        new_sigs = hold(
+            signature_table(e_surv, num_hashes=num_hashes, shingle_n=shingle_n)
+        )
+        corpus_sigs = hold(
+            state.read(spark, sig_root, _SIG_SCHEMA, before=batch_id)
+        )
+        pairs = hold(
+            incremental_pairs_from_sigs(
                 new_sigs,
                 corpus_sigs,
                 num_hashes=num_hashes,
                 bands=bands,
                 threshold_ppm=threshold_ppm,
                 persist=False,
-            ).persist()
-            handles.append(pairs)
-            bids = new_sigs.select("doc_id")
-            a_new = F.col("_an").isNotNull()
-            b_new = F.col("_bn").isNotNull()
-            tagged = (
-                pairs.join(
-                    F.broadcast(
-                        bids.select(
-                            F.col("doc_id").alias("doc_a"),
-                            F.lit(True).alias("_an"),
-                        )
-                    ),
-                    "doc_a",
-                    "left",
-                )
-                .join(
-                    F.broadcast(
-                        bids.select(
-                            F.col("doc_id").alias("doc_b"),
-                            F.lit(True).alias("_bn"),
-                        )
-                    ),
-                    "doc_b",
-                    "left",
-                )
             )
-            new_new = tagged.filter(a_new & b_new).select("doc_a", "doc_b")
-            anchored = (
-                tagged.filter(a_new != b_new)
-                .select(
-                    F.when(a_new, F.col("doc_a"))
-                    .otherwise(F.col("doc_b"))
-                    .alias("doc_id")
-                )
-                .distinct()
-            )
-            # CC keeper over the batch-internal pair graph; components
-            # touching the corpus through any anchored member drop whole
-            comp = near_dedup_keep(
-                e_surv.select("doc_id"), pairs=new_new
-            ).select("doc_id", "keep_id", "is_kept")
-            anchored_comps = (
-                comp.join(anchored, "doc_id").select("keep_id").distinct()
-            )
-            n_flag = comp.join(
+        )
+        bids = new_sigs.select("doc_id")
+        a_new = F.col("_an").isNotNull()
+        b_new = F.col("_bn").isNotNull()
+        tagged = (
+            pairs.join(
                 F.broadcast(
-                    anchored_comps.withColumn("_anc", F.lit(True))
+                    bids.select(
+                        F.col("doc_id").alias("doc_a"),
+                        F.lit(True).alias("_an"),
+                    )
                 ),
-                "keep_id",
+                "doc_a",
                 "left",
+            )
+            .join(
+                F.broadcast(
+                    bids.select(
+                        F.col("doc_id").alias("doc_b"),
+                        F.lit(True).alias("_bn"),
+                    )
+                ),
+                "doc_b",
+                "left",
+            )
+        )
+        new_new = tagged.filter(a_new & b_new).select("doc_a", "doc_b")
+        anchored = (
+            tagged.filter(a_new != b_new)
+            .select(
+                F.when(a_new, F.col("doc_a"))
+                .otherwise(F.col("doc_b"))
+                .alias("doc_id")
+            )
+            .distinct()
+        )
+        # CC keeper over the batch-internal pair graph; components
+        # touching the corpus through any anchored member drop whole
+        comp = near_dedup_keep(
+            e_surv.select("doc_id"), pairs=new_new
+        ).select("doc_id", "keep_id", "is_kept")
+        anchored_comps = (
+            comp.join(anchored, "doc_id").select("keep_id").distinct()
+        )
+        n_flag = comp.join(
+            F.broadcast(
+                anchored_comps.withColumn("_anc", F.lit(True))
+            ),
+            "keep_id",
+            "left",
+        ).select(
+            "doc_id",
+            ((F.col("is_kept") == 1) & F.col("_anc").isNull()).alias(
+                "_n_keep"
+            ),
+        )
+        n_surv = e_surv.join(
+            n_flag.filter("_n_keep"), "doc_id"
+        ).select("doc_id", "text")
+
+        if bench_ng is not None:
+            c = contamination(n_surv, bench_ngrams=bench_ng).select(
+                "doc_id",
+                (
+                    F.col("contamination_ppm")
+                    <= max_contamination_ppm
+                ).alias("_c_keep"),
+            )
+        else:
+            c = n_surv.select(
+                "doc_id", F.lit(True).alias("_c_keep")
+            )
+
+        if bench_sigs is not None:
+            from mod_reservoir_spark.pipeline.dedup import (
+                near_contamination,
+            )
+
+            c_surv = n_surv.join(c.filter("_c_keep"), "doc_id")
+            nc = near_contamination(
+                c_surv.select("doc_id", "text"),
+                benchmark_sigs=bench_sigs,
+                num_hashes=num_hashes,
+                bands=bands,
+                shingle_n=shingle_n,
+                threshold_ppm=benchmark_near_ppm,
             ).select(
                 "doc_id",
-                ((F.col("is_kept") == 1) & F.col("_anc").isNull()).alias(
-                    "_n_keep"
-                ),
+                (F.col("n_bench_matches") == 0).alias("_nc_keep"),
             )
-            n_surv = e_surv.join(
-                n_flag.filter("_n_keep"), "doc_id"
-            ).select("doc_id", "text")
-
-            if bench_ng is not None:
-                c = contamination(n_surv, bench_ngrams=bench_ng).select(
-                    "doc_id",
-                    (
-                        F.col("contamination_ppm")
-                        <= max_contamination_ppm
-                    ).alias("_c_keep"),
-                )
-            else:
-                c = n_surv.select(
-                    "doc_id", F.lit(True).alias("_c_keep")
-                )
-
-            if bench_sigs is not None:
-                from mod_reservoir_spark.pipeline.dedup import (
-                    near_contamination,
-                )
-
-                c_surv = n_surv.join(c.filter("_c_keep"), "doc_id")
-                nc = near_contamination(
-                    c_surv.select("doc_id", "text"),
-                    benchmark_sigs=bench_sigs,
-                    num_hashes=num_hashes,
-                    bands=bands,
-                    shingle_n=shingle_n,
-                    threshold_ppm=benchmark_near_ppm,
-                ).select(
-                    "doc_id",
-                    (F.col("n_bench_matches") == 0).alias("_nc_keep"),
-                )
-            else:
-                nc = batch.select(
-                    "doc_id", F.lit(True).alias("_nc_keep")
-                )
-
-            ledger = (
-                batch.join(q, "doc_id", "left")
-                .join(
-                    flagged.select("doc_id", "_e_keep"), "doc_id", "left"
-                )
-                .join(n_flag, "doc_id", "left")
-                .join(c, "doc_id", "left")
-                .join(nc, "doc_id", "left")
+        else:
+            nc = batch.select(
+                "doc_id", F.lit(True).alias("_nc_keep")
             )
-            drop_stage = F.when(F.lit(False), F.lit(""))
-            if u is not None:
-                ledger = ledger.join(u, "doc_id", "left")
-                drop_stage = drop_stage.when(
-                    ~F.col("_u_keep"), F.lit("url_dup")
-                )
+
+        ledger = (
+            batch.join(q, "doc_id", "left")
+            .join(
+                flagged.select("doc_id", "_e_keep"), "doc_id", "left"
+            )
+            .join(n_flag, "doc_id", "left")
+            .join(c, "doc_id", "left")
+            .join(nc, "doc_id", "left")
+        )
+        drop_stage = F.when(F.lit(False), F.lit(""))
+        if u is not None:
+            ledger = ledger.join(u, "doc_id", "left")
             drop_stage = drop_stage.when(
-                F.col("_q_keep") == 0, F.lit("quality")
+                ~F.col("_u_keep"), F.lit("url_dup")
             )
-            if px is not None:
-                ledger = ledger.join(
-                    px.select("doc_id", "_p_keep"), "doc_id", "left"
-                )
-                drop_stage = drop_stage.when(
-                    F.col("_p_keep").isNull() | ~F.col("_p_keep"),
-                    F.lit("perplexity"),
-                )
-            drop_stage = (
-                drop_stage
-                .when(~F.col("_e_keep"), F.lit("exact_dup"))
-                .when(~F.col("_n_keep"), F.lit("near_dup"))
-                .when(~F.col("_c_keep"), F.lit("contaminated"))
-                .when(~F.col("_nc_keep"), F.lit("near_contaminated"))
+        drop_stage = drop_stage.when(
+            F.col("_q_keep") == 0, F.lit("quality")
+        )
+        if px is not None:
+            ledger = ledger.join(
+                px.select("doc_id", "_p_keep"), "doc_id", "left"
             )
-            out_text = F.when(
-                drop_stage.isNull(),
-                pii_scrub_expr(F.col("text")) if scrub else F.col("text"),
+            drop_stage = drop_stage.when(
+                F.col("_p_keep").isNull() | ~F.col("_p_keep"),
+                F.lit("perplexity"),
             )
-            ledger_rows = ledger.select(
-                "doc_id",
-                drop_stage.alias("drop_stage"),
-                "reject_reasons",
-                out_text.alias("text"),
-            )
-            _commit(ledger_rows, ledger_root, batch_id)
-            if new_owners is not None:
-                _commit(new_owners, url_root, batch_id)
-            _commit(
-                e_surv.select(
-                    F.col("_fp").alias("fingerprint"), "doc_id"
-                ),
-                fp_root,
-                batch_id,
-            )
-            _commit(new_sigs, sig_root, batch_id)
-        finally:
-            for h in handles:
-                h.unpersist()
+        drop_stage = (
+            drop_stage
+            .when(~F.col("_e_keep"), F.lit("exact_dup"))
+            .when(~F.col("_n_keep"), F.lit("near_dup"))
+            .when(~F.col("_c_keep"), F.lit("contaminated"))
+            .when(~F.col("_nc_keep"), F.lit("near_contaminated"))
+        )
+        out_text = F.when(
+            drop_stage.isNull(),
+            pii_scrub_expr(F.col("text")) if scrub else F.col("text"),
+        )
+        ledger_rows = ledger.select(
+            "doc_id",
+            drop_stage.alias("drop_stage"),
+            "reject_reasons",
+            out_text.alias("text"),
+        )
+        state.commit(ledger_rows, ledger_root, batch_id)
+        if new_owners is not None:
+            state.commit(new_owners, url_root, batch_id)
+        state.commit(
+            e_surv.select(
+                F.col("_fp").alias("fingerprint"), "doc_id"
+            ),
+            fp_root,
+            batch_id,
+        )
+        state.commit(new_sigs, sig_root, batch_id)
 
-    docs = (
-        # schema override: per-language gating (lm_strata) needs the
-        # stratum columns on the stream — default stays (doc_id, text)
-        spark.readStream.schema(schema or DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(input_dir)
-    )
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    # schema override: per-language gating (lm_strata) needs the
+    # stratum columns on the stream — default stays (doc_id, text)
+    return state.start_file_stream(
+        spark, input_dir, checkpoint_dir, schema or DOC_SCHEMA, process
     )
 
 
 def compact_curate_state(spark: SparkSession, state_dir: str) -> dict:
     """Consolidate the per-batch partitions of the streaming-curate
-    state into one ``batch=-1`` partition — the curate sibling of
-    windowed.compact_near_dedup_state, with the OPPOSITE conflict
-    rule: curate state is FIRST-SEEN-WINS (the arrival-order
+    state into one ``batch=-1`` partition per table — the curate
+    sibling of windowed.compact_near_dedup_state, with the OPPOSITE
+    conflict rule: curate state is FIRST-SEEN-WINS (the arrival-order
     contract), so a key appearing in several batches keeps its
     EARLIEST row (min batch), where near-dedup keeps the latest.
-    Keys: fingerprints by fingerprint, signatures and ledger by
-    doc_id.
+    Keys: fingerprints by fingerprint, urls by canonical_url,
+    signatures and ledger by doc_id.
 
     Run while the stream is STOPPED **after a clean stop**
     (processAllAvailable → stop): replay protection relies on a
@@ -601,13 +552,10 @@ def compact_curate_state(spark: SparkSession, state_dir: str) -> dict:
     corpus it reads, and folding that partition into ``batch=-1``
     removes the exclusion handle — compacting with a replay pending
     would make the replay see its own fingerprints and drop every
-    document as a duplicate of itself. Same staged-rename commit
-    order as the near-dedup compactor: never an empty or shrunken
-    state, duplicate rows on mid-clear crash are converged by
-    rerunning. Returns per-table row counts.
+    document as a duplicate of itself. Crash-recoverable like every
+    compaction (:func:`~mod_reservoir_spark.streaming.state.compact`).
+    Returns per-table row counts.
     """
-    from mod_reservoir_spark.streaming.windowed import COMPACTED_BATCH
-
     stats = {}
     for table, key_cols, schema in (
         ("fingerprints", ["fingerprint"], _FP_SCHEMA),
@@ -615,68 +563,37 @@ def compact_curate_state(spark: SparkSession, state_dir: str) -> dict:
         ("signatures", ["doc_id"], _SIG_SCHEMA),
         ("ledger", ["doc_id"], _LEDGER_SCHEMA),
     ):
-        root = os.path.join(state_dir, table)
-        if not os.path.isdir(root):
-            stats[table] = 0
-            continue
-        staging = os.path.join(root, ".staging-compact")
-        old_compact = os.path.join(root, ".old-compact")
-        final = os.path.join(root, f"batch={COMPACTED_BATCH}")
-        if os.path.isdir(old_compact) and not os.path.isdir(final):
-            os.rename(old_compact, final)
-        for leftover in (staging, old_compact):
-            if os.path.isdir(leftover):
-                shutil.rmtree(leftover)
-        parts = sorted(
-            e for e in os.listdir(root) if e.startswith("batch=")
-        )
-        if not parts:
-            stats[table] = 0
-            continue
-        df = spark.read.parquet(root)
-        cols = [f.split(" ")[0] for f in schema.split(", ")]
+        cols = spark.createDataFrame([], schema).columns
         val_cols = [c for c in cols if c not in key_cols]
-        # first-seen wins: min(struct(batch, vals)) per key; the
-        # compacted batch=-1 sorts BELOW real batches, so an already-
-        # compacted row keeps winning over any later re-appearance
-        agg = (
-            df.groupBy(*key_cols)
-            .agg(
-                F.min(F.struct("batch", *val_cols)).alias("_first")
+
+        def first_seen(df):
+            # min(struct(batch, vals)) per key; the compacted batch=-1
+            # sorts BELOW real batches, so an already-compacted row
+            # keeps winning over any later re-appearance
+            return (
+                df.groupBy(*key_cols)
+                .agg(F.min(F.struct("batch", *val_cols)).alias("_first"))
+                .select(
+                    *key_cols,
+                    *[F.col(f"_first.{c}").alias(c) for c in val_cols],
+                )
+                .select(*cols)
             )
-            .select(*key_cols, *[F.col(f"_first.{c}").alias(c) for c in val_cols])
-            .select(*cols)
+
+        stats[table], _ = state.compact(
+            spark, os.path.join(state_dir, table), first_seen
         )
-        agg.write.mode("overwrite").parquet(staging)
-        stats[table] = spark.read.parquet(staging).count()
-        if os.path.isdir(final):
-            os.rename(final, old_compact)
-        os.rename(staging, final)
-        for p in parts:
-            if p != f"batch={COMPACTED_BATCH}":
-                shutil.rmtree(os.path.join(root, p))
-        if os.path.isdir(old_compact):
-            shutil.rmtree(old_compact)
     return stats
 
 
 def read_curate_state(spark: SparkSession, state_dir: str):
     """(ledger, fingerprints, signatures) DataFrames of the accumulated
     streaming-curation state; empty typed frames before first commit."""
-    return (
-        _read_state(
-            spark, os.path.join(state_dir, "ledger"), _LEDGER_SCHEMA, None
-        ),
-        _read_state(
-            spark,
-            os.path.join(state_dir, "fingerprints"),
-            _FP_SCHEMA,
-            None,
-        ),
-        _read_state(
-            spark,
-            os.path.join(state_dir, "signatures"),
-            _SIG_SCHEMA,
-            None,
-        ),
+    return tuple(
+        state.read(spark, os.path.join(state_dir, table), schema)
+        for table, schema in (
+            ("ledger", _LEDGER_SCHEMA),
+            ("fingerprints", _FP_SCHEMA),
+            ("signatures", _SIG_SCHEMA),
+        )
     )

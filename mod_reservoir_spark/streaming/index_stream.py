@@ -3,20 +3,18 @@ r6 "What's missing #3") — continuous ingest keeps the retrieval index
 fresh, the way the HLL/CM sketches and the minhash signature table
 already have streaming faces.
 
-State contract (the ``streaming_hll`` shape, windowed.py):
+State (format and replay contract in
+:mod:`~mod_reservoir_spark.streaming.state`):
 
 - each micro-batch tokenizes ONLY its own documents
   (:func:`~mod_reservoir_spark.pipeline.text.build_text_index` over
   the batch — the :func:`merge_text_index` insight that postings of
   new doc_ids are a pure append and df needs no maintenance) and
-  commits them as an immutable partition ``postings/batch=<id>/``;
-- the batch's (n_docs, sum_dl) sidecar lands at ``stats/batch=<id>/``
-  — both ADDITIVE, so the folded corpus stats are a read-time SUM;
-- commits stage + atomically rename, so an at-least-once REPLAY
-  rewrites its own partition with identical rows (postings are a pure
-  function of the batch's documents) and the fold is unchanged —
-  exactly-once state from at-least-once delivery, replay-pinned in
-  tests/test_bm25.py;
+  commits them under ``postings/``, its (n_docs, sum_dl) sidecar
+  under ``stats/`` — both ADDITIVE, so the folded corpus stats are a
+  read-time SUM; postings are a pure function of the batch's
+  documents, so a replay leaves the fold unchanged (replay-pinned in
+  tests/test_bm25.py);
 - the folded index is EXACTLY ``build_text_index`` over everything
   ingested (no approximation: equivalence-pinned), so
   ``bm25_search_indexed`` / ``bm25_search_batch`` serve from it
@@ -39,10 +37,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from mod_reservoir_spark.pipeline.text import build_text_index, write_text_index
-from mod_reservoir_spark.streaming.windowed import (
-    DOC_SCHEMA,
-    _commit_sketch_partition,
-)
+from mod_reservoir_spark.streaming import state
+from mod_reservoir_spark.streaming.windowed import DOC_SCHEMA
 
 
 def stream_text_index(
@@ -56,7 +52,7 @@ def stream_text_index(
     """Maintain the BM25 inverted index under continuous JSONL ingest.
 
     Returns the started streaming query; state lands under
-    ``{state_dir}/postings/batch=<id>/`` + ``{state_dir}/stats/...``
+    ``{state_dir}/postings/`` + ``{state_dir}/stats/``
     and is read with :func:`read_stream_text_index` or folded into the
     serving layout with :func:`compact_text_index`.
     """
@@ -69,20 +65,13 @@ def stream_text_index(
         # batch tokenization; materializing once avoids tokenizing the
         # batch twice and pins ONE set of rows for both commits
         postings = postings.localCheckpoint(eager=True)
-        _commit_sketch_partition(postings, postings_root, batch_id)
-        _commit_sketch_partition(
+        state.commit(postings, postings_root, batch_id)
+        state.commit(
             stats.select("n_docs", "sum_dl"), stats_root, batch_id
         )
 
-    docs = (
-        spark.readStream.schema(schema or DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(input_dir)
-    )
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return state.start_file_stream(
+        spark, input_dir, checkpoint_dir, schema or DOC_SCHEMA, process
     )
 
 
@@ -93,11 +82,9 @@ def read_stream_text_index(
     the same shapes :func:`~mod_reservoir_spark.pipeline.text
     .read_text_index` returns, directly servable by
     ``bm25_search_indexed`` / ``bm25_search_batch``."""
-    postings = spark.read.parquet(
-        os.path.join(state_dir, "postings")
-    ).drop("batch")
+    postings = state.read(spark, os.path.join(state_dir, "postings"), None)
     stats = (
-        spark.read.parquet(os.path.join(state_dir, "stats"))
+        state.read(spark, os.path.join(state_dir, "stats"), None)
         .agg(
             F.sum("n_docs").cast("long").alias("n_docs"),
             F.sum("sum_dl").cast("long").alias("sum_dl"),

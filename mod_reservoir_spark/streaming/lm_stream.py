@@ -6,19 +6,17 @@ table are maintained. The serving use is
 rank INCOMING documents by NLL under the maintained reference counts
 (the CCNet pattern — a clean-corpus LM scoring the crawl).
 
-State contract (the ``streaming_hll`` / ``stream_text_index`` shape):
+State (format and replay contract in
+:mod:`~mod_reservoir_spark.streaming.state`):
 
 - each micro-batch counts ONLY its own documents
   (:func:`~mod_reservoir_spark.pipeline.text.ngram_count_tables` over
-  the batch) and commits every order's table as an immutable
-  partition ``grams{k}/batch=<id>/`` (k = N..2, count column ``c``) +
-  ``unigrams/batch=<id>/``;
+  the batch) and commits every order's table under ``grams{k}/``
+  (k = N..2, count column ``c``) + ``unigrams/``;
 - counts are ADDITIVE (corpus counts = key-wise sum of batch counts),
-  so the fold is one groupBy-sum per table at read time;
-- commits stage + atomically rename, so an at-least-once REPLAY
-  rewrites its own partition with identical rows (counts are a pure
-  function of the batch's documents) and the fold is unchanged —
-  exactly-once state from at-least-once delivery;
+  so the fold is one groupBy-sum per table at read time, and a replay
+  (same rows: counts are a pure function of the batch's documents)
+  leaves it unchanged;
 - the folded tables are EXACTLY ``ngram_count_tables`` over
   everything ingested (equivalence-pinned in
   tests/test_windowed_streaming.py), so ``ngram_logprob_against``
@@ -45,10 +43,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from mod_reservoir_spark.pipeline.text import ngram_count_tables
-from mod_reservoir_spark.streaming.windowed import (
-    DOC_SCHEMA,
-    _commit_sketch_partition,
-)
+from mod_reservoir_spark.streaming import state
+from mod_reservoir_spark.streaming.windowed import DOC_SCHEMA
 
 
 def _table_dirs(order: int) -> list[str]:
@@ -64,12 +60,12 @@ def _commit_ngram_counts(
     text_col: str = "text",
     strata: tuple[str, ...] = (),
 ) -> None:
-    """Count one micro-batch and commit every table as its immutable
-    ``batch=<id>`` partition — the per-batch step of
-    :func:`stream_ngram_counts` (a replay rewrites the same rows)."""
+    """Count one micro-batch and commit every table — the per-batch
+    step of :func:`stream_ngram_counts` (a replay rewrites the same
+    rows)."""
     tables = ngram_count_tables(batch_df, order, text_col, strata)
     for tbl, d in zip(tables, _table_dirs(order)):
-        _commit_sketch_partition(tbl, os.path.join(state_dir, d), batch_id)
+        state.commit(tbl, os.path.join(state_dir, d), batch_id)
 
 
 def stream_ngram_counts(
@@ -98,15 +94,8 @@ def stream_ngram_counts(
             batch_df, state_dir, batch_id, order, text_col, strata
         )
 
-    docs = (
-        spark.readStream.schema(schema or DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(input_dir)
-    )
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return state.start_file_stream(
+        spark, input_dir, checkpoint_dir, schema or DOC_SCHEMA, process
     )
 
 
@@ -118,12 +107,12 @@ def read_stream_ngram_counts(
     ``ngram_count_tables`` returns."""
     out: list[DataFrame] = []
     for d in _table_dirs(order):
-        raw = spark.read.parquet(os.path.join(state_dir, d))
+        raw = state.read(spark, os.path.join(state_dir, d), None)
         count = "ctf" if d == "unigrams" else "c"
         # grouping keys inferred from the committed columns, so
         # stratified state (extra stratum columns) folds without a
         # matching parameter
-        keys = [c for c in raw.columns if c not in (count, "batch")]
+        keys = [c for c in raw.columns if c != count]
         out.append(
             raw.groupBy(*keys).agg(F.sum(count).cast("long").alias(count))
         )
@@ -158,7 +147,7 @@ def stream_lm_prefix(
     window-count table (:func:`~mod_reservoir_spark.pipeline.lm_model.
     build_lm_prefix` over the batch — one batch scan + one shuffle,
     versus the per-order face's N of each) and commits it under
-    ``prefix/batch=<id>/``. Window counts are ADDITIVE like every
+    ``prefix/``. Window counts are ADDITIVE like every
     other count here, so the read-time fold is one groupBy-sum and
     equals ``build_lm_prefix`` over everything ingested
     (equivalence-pinned); :func:`fold_to_model` turns the accumulated
@@ -175,21 +164,14 @@ def stream_lm_prefix(
     root = os.path.join(state_dir, "prefix")
 
     def process(batch_df, batch_id):
-        _commit_sketch_partition(
+        state.commit(
             build_lm_prefix(batch_df, order, text_col, strata),
             root,
             batch_id,
         )
 
-    docs = (
-        spark.readStream.schema(schema or DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(input_dir)
-    )
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return state.start_file_stream(
+        spark, input_dir, checkpoint_dir, schema or DOC_SCHEMA, process
     )
 
 
@@ -198,8 +180,8 @@ def read_stream_lm_prefix(
 ) -> DataFrame:
     """The folded prefix table over every committed batch partition —
     exactly ``build_lm_prefix`` over everything ingested."""
-    raw = spark.read.parquet(os.path.join(state_dir, "prefix"))
-    keys = [c for c in raw.columns if c not in ("c", "batch")]
+    raw = state.read(spark, os.path.join(state_dir, "prefix"), None)
+    keys = [c for c in raw.columns if c != "c"]
     return raw.groupBy(*keys).agg(F.sum("c").cast("long").alias("c"))
 
 

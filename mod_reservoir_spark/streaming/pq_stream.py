@@ -10,11 +10,9 @@ state contract is the ``index_stream`` shape exactly:
 
 - each micro-batch encodes ONLY its own vectors
   (:func:`~mod_reservoir_spark.pipeline.pq.pq_index` over the batch)
-  and commits them as an immutable partition ``index/batch=<id>/``;
-- commits stage + atomically rename, so an at-least-once REPLAY
-  rewrites its own partition with identical rows and the fold is
-  unchanged — exactly-once state from at-least-once delivery
-  (replay-pinned in tests/test_pq_stream.py);
+  and commits them under ``index/`` (format and replay contract in
+  :mod:`~mod_reservoir_spark.streaming.state`; replay-pinned in
+  tests/test_pq_stream.py);
 - the folded table is EXACTLY ``pq_index`` over everything ingested
   (equivalence-pinned), so :func:`~mod_reservoir_spark.pipeline.pq
   .ivf_pq_topk` serves from it unchanged;
@@ -36,7 +34,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from mod_reservoir_spark.pipeline.pq import pq_index
-from mod_reservoir_spark.streaming.windowed import _commit_sketch_partition
+from mod_reservoir_spark.streaming import state
 
 EMB_SCHEMA = "vec_id long, embedding array<double>"
 
@@ -53,7 +51,7 @@ def stream_pq_index(
 ):
     """Maintain the (vec_id, cell, codes) ANN index under continuous
     JSONL vector ingest. Returns the started streaming query; state
-    lands under ``{state_dir}/index/batch=<id>/`` and is read with
+    lands under ``{state_dir}/index/`` and is read with
     :func:`read_stream_pq_index` or folded into the serving layout
     with :func:`compact_pq_index`."""
     index_root = os.path.join(state_dir, "index")
@@ -62,26 +60,17 @@ def stream_pq_index(
         idx = pq_index(
             batch_df, codebooks, centroids, vec_col=vec_col
         ).localCheckpoint(eager=True)
-        _commit_sketch_partition(idx, index_root, batch_id)
+        state.commit(idx, index_root, batch_id)
 
-    vecs = (
-        spark.readStream.schema(schema or EMB_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(input_dir)
-    )
-    return (
-        vecs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return state.start_file_stream(
+        spark, input_dir, checkpoint_dir, schema or EMB_SCHEMA, process
     )
 
 
 def read_stream_pq_index(spark: SparkSession, state_dir: str) -> DataFrame:
     """The folded (vec_id, cell, codes) table over every committed
     batch partition — directly servable by ``ivf_pq_topk``."""
-    return spark.read.parquet(os.path.join(state_dir, "index")).drop(
-        "batch"
-    )
+    return state.read(spark, os.path.join(state_dir, "index"), None)
 
 
 def compact_pq_index(

@@ -1,31 +1,29 @@
 """Streaming face for SemDeDup — semantic near-duplicate detection
 under continuous ingest, completing the dedup-family lifecycle: exact
-(fingerprints) and MinHash near-dedup have had maintained streaming
-state since round 4-5; this gives the embedding family the same shape.
+(fingerprints) and MinHash near-dedup have maintained streaming state;
+this gives the embedding family the same shape.
 
-State contract (the ``streaming_near_dedup`` shape, windowed.py):
+Centroids are FROZEN for the stream's lifetime (trained offline with
+:func:`~mod_reservoir_spark.pipeline.similarity.kmeans_train` on a
+sample — the frozen-reference argument from the LM gate and the
+benchmark signature table: a moving cell structure would re-assign old
+vectors and break the replay contract; refresh = retrain + restart on
+compacted state).
 
-- centroids are FROZEN for the stream's lifetime (trained offline with
-  :func:`~mod_reservoir_spark.pipeline.similarity.kmeans_train` on a
-  sample — the frozen-reference argument from the LM gate and the
-  benchmark signature table: a moving cell structure would re-assign
-  old vectors and break the replay contract; refresh = retrain +
-  restart on compacted state);
-- per micro-batch of ``(vec_id, embedding)``: assign the batch to
-  cells (:func:`ivf_assign` under the frozen centroids, two-level
-  routing included), read the accumulated member state EXCLUDING the
-  batch's own ids (broadcast anti-join — replay safety), emit
-  within-batch pairs (self-join, each unordered pair once) plus
-  batch × corpus cross pairs through the shared
-  :func:`~mod_reservoir_spark.pipeline.similarity.cell_cosine_pairs`
-  core, and commit the batch's ``(vec_id, cell, v)`` members and its
-  pairs as immutable ``batch=<id>`` partitions (stage + rename);
-- because every pair touches the batch of its later-arriving member,
-  the union of per-batch pair partitions equals the one-shot
-  within-cell pair set over everything ingested under the same frozen
-  centroids (equivalence pinned in tests); the keeper is read-time:
-  ``near_dedup_keep(ids, pairs=folded_pairs)`` — identical CC policy
-  to batch :func:`semantic_dedup`.
+Per micro-batch of ``(vec_id, embedding)`` (the ``streaming_near_dedup``
+protocol, windowed.py; state format in
+:mod:`~mod_reservoir_spark.streaming.state`): assign the batch to cells
+(:func:`ivf_assign` under the frozen centroids, two-level routing
+included), emit within-batch pairs (self-join, each unordered pair
+once) plus batch × corpus cross pairs through the shared
+:func:`~mod_reservoir_spark.pipeline.similarity.cell_cosine_pairs`
+core, and commit the pairs and the batch's ``(vec_id, cell, v)``
+members. Because every pair touches the batch of its later-arriving
+member, the union of per-batch pair partitions equals the one-shot
+within-cell pair set over everything ingested under the same frozen
+centroids (equivalence pinned in tests); the keeper is read-time:
+``near_dedup_keep(ids, pairs=folded_pairs)`` — identical CC policy to
+batch :func:`semantic_dedup`.
 
 At 100 TB: per-batch cost is the batch assignment plus a cell
 equi-join against only the cells the batch touches; state grows one
@@ -43,7 +41,11 @@ from mod_reservoir_spark.pipeline.similarity import (
     cell_cosine_pairs,
     ivf_assign,
 )
-from mod_reservoir_spark.streaming.windowed import _commit_sketch_partition
+from mod_reservoir_spark.streaming import state
+from mod_reservoir_spark.streaming.windowed import (
+    _compact_id_pairs_state,
+    _start_dedup_stream,
+)
 
 EMB_SCHEMA = T.StructType(
     [
@@ -51,6 +53,7 @@ EMB_SCHEMA = T.StructType(
         T.StructField("embedding", T.ArrayType(T.DoubleType())),
     ]
 )
+_MEMBERS_SCHEMA = "vec_id long, cell int, v array<double>"
 
 
 def streaming_semantic_dedup(
@@ -66,84 +69,26 @@ def streaming_semantic_dedup(
     """Start the streaming SemDeDup over JSONL ``(vec_id, embedding)``
     rows in ``input_dir``. Returns the StreamingQuery; read the
     accumulated state with :func:`read_semantic_dedup_state`."""
-    members_root = os.path.join(state_dir, "members")
-    pairs_root = os.path.join(state_dir, "pairs")
-    empty_members = spark.createDataFrame(
-        [], "vec_id long, cell int, v array<double>"
-    )
 
-    def read_members(before_batch):
-        if not os.path.isdir(members_root) or not any(
-            e.startswith("batch=") for e in os.listdir(members_root)
-        ):
-            return empty_members
-        # only partitions committed BEFORE this batch id: for a new
-        # batch that is all of them; for an at-least-once REPLAY of an
-        # older batch it excludes later arrivals, so the rewritten
-        # pairs partition is row-identical to the original run
-        # (ADVICE r7 — without the filter a replay gained orientation
-        # duplicates of cross pairs owned by later partitions; the
-        # folded SET was stable, row-level idempotence was not).
-        # Compacted batch=-1 partitions predate any live id by
-        # construction (compaction runs on a stopped stream).
-        return (
-            spark.read.parquet(members_root)
-            .filter(F.col("batch") < before_batch)
-            .select("vec_id", "cell", "v")
-        )
+    def assign(batch_df):
+        cells = ivf_assign(batch_df, centroids=centroids, two_level=two_level)
+        return batch_df.select(
+            "vec_id",
+            F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+        ).join(cells, "vec_id")
 
-    def process(batch_df, batch_id):
-        batch_df = batch_df.filter(F.col("vec_id").isNotNull())
-        cells = ivf_assign(
-            batch_df, centroids=centroids, two_level=two_level
+    def find_pairs(batch_ev, corpus_ev):
+        within = cell_cosine_pairs(batch_ev, batch_ev, threshold)
+        cross = cell_cosine_pairs(
+            batch_ev, corpus_ev, threshold, self_join=False
         )
-        batch_ev = (
-            batch_df.select(
-                "vec_id",
-                F.transform("embedding", lambda x: x.cast("double")).alias(
-                    "v"
-                ),
-            )
-            .join(cells, "vec_id")
-            .persist()
-        )
-        corpus_ev = (
-            read_members(batch_id)
-            .join(
-                F.broadcast(batch_ev.select("vec_id")),
-                "vec_id",
-                "left_anti",
-            )
-            .persist()
-        )
-        try:
-            within = cell_cosine_pairs(batch_ev, batch_ev, threshold)
-            cross = cell_cosine_pairs(
-                batch_ev, corpus_ev, threshold, self_join=False
-            )
-            pairs = within.unionByName(cross)
-            # pairs derive from both persisted frames; checkpoint ONE
-            # row set before the state commit (the near_dedup pattern)
-            pairs = pairs.localCheckpoint(eager=True)
-            _commit_sketch_partition(pairs, pairs_root, batch_id)
-            _commit_sketch_partition(
-                batch_ev.select("vec_id", "cell", "v"),
-                members_root,
-                batch_id,
-            )
-        finally:
-            batch_ev.unpersist()
-            corpus_ev.unpersist()
+        # pairs derive from both persisted frames; checkpoint ONE row
+        # set before the state commit (the near_dedup pattern)
+        return within.unionByName(cross).localCheckpoint(eager=True)
 
-    docs = (
-        spark.readStream.schema(schema or EMB_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(input_dir)
-    )
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _start_dedup_stream(
+        spark, input_dir, checkpoint_dir, state_dir, schema or EMB_SCHEMA,
+        "members", _MEMBERS_SCHEMA, assign, find_pairs,
     )
 
 
@@ -156,10 +101,6 @@ def compact_semantic_dedup_state(
     the :func:`~mod_reservoir_spark.streaming.windowed.
     compact_near_dedup_state` semantics for the embedding family. Run
     while the stream is stopped; idempotent."""
-    from mod_reservoir_spark.streaming.windowed import (
-        _compact_id_pairs_state,
-    )
-
     return _compact_id_pairs_state(
         spark, state_dir, "members", "vec_id", ["cell", "v"], []
     )
@@ -173,21 +114,11 @@ def read_semantic_dedup_state(
     ``pairs`` is the full near-duplicate pair graph — feed it to
     ``near_dedup_keep(ids, pairs=...)`` for the batch-identical CC
     keeper, or to ``semantic_dedup``'s keep policies."""
-    def read_or_empty(root, schema, cols):
-        if not os.path.isdir(root) or not any(
-            e.startswith("batch=") for e in os.listdir(root)
-        ):
-            return spark.createDataFrame([], schema)
-        return spark.read.parquet(root).select(*cols)
-
-    members = read_or_empty(
-        os.path.join(state_dir, "members"),
-        "vec_id long, cell int, v array<double>",
-        ["vec_id", "cell", "v"],
+    return (
+        state.read(
+            spark, os.path.join(state_dir, "members"), _MEMBERS_SCHEMA
+        ),
+        state.read(
+            spark, os.path.join(state_dir, "pairs"), "doc_a long, doc_b long"
+        ),
     )
-    pairs = read_or_empty(
-        os.path.join(state_dir, "pairs"),
-        "doc_a long, doc_b long",
-        ["doc_a", "doc_b"],
-    )
-    return members, pairs

@@ -18,10 +18,16 @@ Both share the JSONL event schema used by the batch `events` table.
 
 from __future__ import annotations
 
+import os
+from contextlib import contextmanager
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import SparkSession, functions as F, types as T
+
+from mod_reservoir_spark.streaming import state
+from mod_reservoir_spark.streaming.state import file_source
+from mod_reservoir_spark.streaming.state import COMPACTED_BATCH  # noqa: F401
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -44,11 +50,7 @@ def streaming_hourly_rollup(
     """Per-(hour, event_type) counts and cents over a file stream,
     update-mode memory sink for inspection. Watermark bounds both
     state size and lateness acceptance."""
-    events = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(input_dir)
-    )
+    events = file_source(spark, input_dir, EVENT_SCHEMA)
     agg = (
         events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour"), "event_type")
@@ -154,11 +156,7 @@ def streaming_dedup(
     (pipeline/dedup.exact_duplicates); near-dup (MinHash) streaming
     would put the signature in key_cols via a preceding select.
     """
-    events = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(input_dir)
-    )
+    events = file_source(spark, input_dir, EVENT_SCHEMA)
     deduped = events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         list(key_cols)
     )
@@ -186,11 +184,7 @@ def streaming_sessionize(
     watermark passes session_end + gap."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    events = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(input_dir)
-    )
+    events = file_source(spark, input_dir, EVENT_SCHEMA)
     sessions = (
         events.withWatermark("ts", watermark)
         .groupBy("user_id")
@@ -219,6 +213,75 @@ DOC_SCHEMA = T.StructType(
 )
 
 
+_SIG_SCHEMA = "doc_id long, hsh array<bigint>, sig array<bigint>"
+_NEAR_PAIRS_SCHEMA = "doc_a long, doc_b long, est_ppm long, jaccard_ppm long"
+_SIMHASH_SCHEMA = "doc_id long, simhash long"
+_SIMHASH_PAIRS_SCHEMA = "doc_a long, doc_b long, hamming long"
+
+
+@contextmanager
+def _held():
+    """Yield ``hold(df)``, which persists ``df`` for one micro-batch;
+    every held frame is unpersisted on exit, also when a step raises.
+    A frame is registered before it is persisted, so nothing persisted
+    can escape the release."""
+    frames = []
+
+    def hold(df):
+        frames.append(df)
+        return df.persist()
+
+    try:
+        yield hold
+    finally:
+        for df in frames:
+            df.unpersist()
+
+
+def _start_dedup_stream(
+    spark: SparkSession,
+    input_dir: str,
+    checkpoint_dir: str,
+    state_dir: str,
+    stream_schema,
+    id_table: str,
+    id_schema: str,
+    sign,
+    find_pairs,
+):
+    """The per-batch protocol of the (id table, pairs) dedup faces.
+
+    Per micro-batch: (1) ``sign`` the batch (non-NULL ids) and persist
+    it; (2) read the id table committed before this batch, anti-joined
+    with the batch's own ids (broadcast; a replay then recomputes
+    against the same corpus as the original run), and persist it;
+    (3) ``find_pairs(signed, corpus)``; (4) commit the pairs, then the
+    batch's ids — :func:`_compact_id_pairs_state` handles the
+    pairs-without-ids state a crash between the two leaves;
+    (5) unpersist both frames, also when a step raises. Persisting
+    keeps the corpus to one read per batch although the pair search
+    references it in several joins; no global cache invalidation, so
+    caches the application holds are untouched."""
+    ids_root = os.path.join(state_dir, id_table)
+    pairs_root = os.path.join(state_dir, "pairs")
+    id_cols = spark.createDataFrame([], id_schema).columns
+    key = id_cols[0]
+
+    def process(batch_df, batch_id):
+        with _held() as hold:
+            signed = hold(sign(batch_df.filter(F.col(key).isNotNull())))
+            corpus = hold(
+                state.read(spark, ids_root, id_schema, before=batch_id)
+                .join(F.broadcast(signed.select(key)), key, "left_anti")
+            )
+            state.commit(find_pairs(signed, corpus), pairs_root, batch_id)
+            state.commit(signed.select(*id_cols), ids_root, batch_id)
+
+    return state.start_file_stream(
+        spark, input_dir, checkpoint_dir, stream_schema, process
+    )
+
+
 def streaming_near_dedup(
     spark: SparkSession,
     input_dir: str,
@@ -233,122 +296,42 @@ def streaming_near_dedup(
     the production lifecycle of incremental LSH dedup wired into
     Structured Streaming via ``foreachBatch``.
 
-    Per micro-batch of documents: (1) sign the batch once (persisted
-    for the duration of the batch); (2) run the signatures-level
-    incremental pass against the accumulated corpus signature state —
-    the corpus is read, never re-shingled, and cost is
-    O(batch × bucket occupancy); (3) APPEND the batch's verified pairs
-    and signatures as per-batch partitions under ``state_dir``
-    (``signatures/batch=<id>/``, ``pairs/batch=<id>/``) — per-batch
-    write volume is O(batch), NOT a rewrite of the accumulated state
-    (a versioned full-table write would pay O(corpus) I/O per batch,
-    quadratic cumulative work). Because every near-dup pair "touches"
-    the batch of its later-arriving member, the union of the per-batch
-    pair partitions equals the full batch `minhash_lsh_pairs` over
-    everything ingested (equivalence pinned in
-    tests/test_windowed_streaming.py). Read the accumulated state with
-    :func:`read_near_dedup_state`.
-
-    Replay safety: ``foreachBatch`` is at-least-once; a replayed batch
-    rewrites ITS OWN partition directory with identical rows, so the
-    state converges. Two details make that literally true: the corpus
-    side EXCLUDES the replaying batch's own doc_ids (broadcast
-    anti-join — without it, a crash between the state commit and the
-    stream checkpoint would replay against a corpus that already
-    contains the batch, and the verify joins would emit each pair 2-4
-    times), and each partition is written to a staging directory then
-    atomically renamed into place, so a concurrent
-    :func:`read_near_dedup_state` never lists a half-written batch.
-    Cross-batch duplicates cannot arise as long as doc_ids are unique
-    across batches (re-ingesting a changed document under the same id
-    needs a compaction pass, same as any append-structured store).
-
-    The batch signatures AND the accumulated corpus read are persisted
-    for the duration of the batch and unpersisted at the end (the
-    incremental pass references the corpus in its bucket join and both
-    verify joins — unpersisted, that is 3 full re-reads of the
-    accumulated state per batch); no global cache invalidation, so
-    caches the embedding application holds are untouched.
+    Per micro-batch of documents (:func:`_start_dedup_stream`): sign
+    the batch once, run the signatures-level incremental pass against
+    the accumulated corpus signature state — the corpus is read, never
+    re-shingled, and cost is O(batch × bucket occupancy) — and commit
+    the batch's verified pairs and signatures as per-batch partitions
+    under ``state_dir`` (``signatures/``, ``pairs/``; format and replay
+    contract in :mod:`~mod_reservoir_spark.streaming.state`). Per-batch
+    write volume is O(batch), NOT a rewrite of the accumulated state.
+    Because every near-dup pair "touches" the batch of its
+    later-arriving member, the union of the per-batch pair partitions
+    equals the full batch `minhash_lsh_pairs` over everything ingested
+    (equivalence pinned in tests/test_windowed_streaming.py). Read the
+    accumulated state with :func:`read_near_dedup_state`. Cross-batch
+    duplicates cannot arise as long as doc_ids are unique across
+    batches (re-ingesting a changed document under the same id needs
+    :func:`compact_near_dedup_state`).
     """
-    import os
-    import shutil
-
     from mod_reservoir_spark.pipeline.dedup import (
         incremental_pairs_from_sigs,
         signature_table,
     )
 
-    sig_root = os.path.join(state_dir, "signatures")
-    pairs_root = os.path.join(state_dir, "pairs")
-    empty_sigs = spark.createDataFrame(
-        [], "doc_id long, hsh array<bigint>, sig array<bigint>"
-    )
-
-    def read_sigs(before_batch):
-        if not os.path.isdir(sig_root) or not any(
-            e.startswith("batch=") for e in os.listdir(sig_root)
-        ):
-            return empty_sigs
-        # batch < current id: no-op for new batches; an at-least-once
-        # REPLAY of an older batch sees exactly the corpus the
-        # original run saw, so its rewritten pairs partition is
-        # row-identical (ADVICE r7 — set-level stability held before,
-        # row-level idempotence did not)
-        return (
-            spark.read.parquet(sig_root)
-            .filter(F.col("batch") < before_batch)
-            .select("doc_id", "hsh", "sig")
-        )
-
-    def commit(df, root, batch_id):
-        staging = os.path.join(root, f".staging-{batch_id}")
-        final = os.path.join(root, f"batch={batch_id}")
-        df.write.mode("overwrite").parquet(staging)
-        if os.path.isdir(final):  # replay: replace the old partition
-            shutil.rmtree(final)
-        os.rename(staging, final)
-
-    def process(batch_df, batch_id):
-        batch_df = batch_df.filter(F.col("doc_id").isNotNull())
-        new_sigs = signature_table(
-            batch_df, num_hashes=num_hashes, shingle_n=shingle_n
-        ).persist()
-        # anti-join out this batch's ids so a replay (state committed,
-        # checkpoint not) recomputes against the SAME corpus as the
-        # original run; new-batch ids broadcast
-        corpus = (
-            read_sigs(batch_id)
-            .join(
-                F.broadcast(new_sigs.select("doc_id")),
-                "doc_id",
-                "left_anti",
-            )
-            .persist()
-        )
-        try:
-            pairs = incremental_pairs_from_sigs(
-                new_sigs,
-                corpus,
-                num_hashes=num_hashes,
-                bands=bands,
-                threshold_ppm=threshold_ppm,
-                persist=False,
-            )
-            commit(pairs, pairs_root, batch_id)
-            commit(new_sigs, sig_root, batch_id)
-        finally:
-            new_sigs.unpersist()
-            corpus.unpersist()
-
-    docs = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(input_dir)
-    )
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _start_dedup_stream(
+        spark, input_dir, checkpoint_dir, state_dir, DOC_SCHEMA,
+        "signatures", _SIG_SCHEMA,
+        lambda docs: signature_table(
+            docs, num_hashes=num_hashes, shingle_n=shingle_n
+        ),
+        lambda sigs, corpus: incremental_pairs_from_sigs(
+            sigs,
+            corpus,
+            num_hashes=num_hashes,
+            bands=bands,
+            threshold_ppm=threshold_ppm,
+            persist=False,
+        ),
     )
 
 
@@ -362,82 +345,24 @@ def streaming_simhash_dedup(
     n_bands: int | None = None,
 ):
     """Streaming SimHash near-dup detection with MAINTAINED state —
-    the simhash sibling of :func:`streaming_near_dedup`, same state
-    contract (per-batch immutable partitions under
-    ``hashes/batch=<id>/`` + ``pairs/batch=<id>/``, staged-rename
-    commits, batch-id anti-join for replay safety, union of per-batch
-    pairs == batch :func:`~mod_reservoir_spark.pipeline.dedup.
-    simhash_near_pairs` over everything ingested). The maintained
-    state is ONE int64 per document — at 100 TB the corpus side of
-    the bucket join is a 16-byte-row table, the cheapest of the
-    dedup-family states."""
-    import os
-    import shutil
-
+    the simhash sibling of :func:`streaming_near_dedup`, same protocol
+    over ``hashes/`` + ``pairs/`` (union of per-batch pairs == batch
+    :func:`~mod_reservoir_spark.pipeline.dedup.simhash_near_pairs`
+    over everything ingested). The maintained state is ONE int64 per
+    document — at 100 TB the corpus side of the bucket join is a
+    16-byte-row table, the cheapest of the dedup-family states."""
     from mod_reservoir_spark.pipeline.dedup import (
         incremental_simhash_pairs,
         simhash,
     )
 
-    sh_root = os.path.join(state_dir, "hashes")
-    pairs_root = os.path.join(state_dir, "pairs")
-    empty_sh = spark.createDataFrame([], "doc_id long, simhash long")
-
-    def read_sh(before_batch):
-        if not os.path.isdir(sh_root) or not any(
-            e.startswith("batch=") for e in os.listdir(sh_root)
-        ):
-            return empty_sh
-        # batch < current id: a no-op for new batches, and an at-
-        # least-once REPLAY of an older batch sees exactly the corpus
-        # the original run saw — its rewritten pairs partition is
-        # row-identical, not just set-stable (ADVICE r7)
-        return (
-            spark.read.parquet(sh_root)
-            .filter(F.col("batch") < before_batch)
-            .select("doc_id", "simhash")
-        )
-
-    def commit(df, root, batch_id):
-        staging = os.path.join(root, f".staging-{batch_id}")
-        final = os.path.join(root, f"batch={batch_id}")
-        df.write.mode("overwrite").parquet(staging)
-        if os.path.isdir(final):
-            shutil.rmtree(final)
-        os.rename(staging, final)
-
-    def process(batch_df, batch_id):
-        batch_df = batch_df.filter(F.col("doc_id").isNotNull())
-        new_sh = simhash(batch_df, bits=bits).persist()
-        corpus = (
-            read_sh(batch_id)
-            .join(
-                F.broadcast(new_sh.select("doc_id")),
-                "doc_id",
-                "left_anti",
-            )
-            .persist()
-        )
-        try:
-            pairs = incremental_simhash_pairs(
-                new_sh, corpus, bits=bits, max_hamming=max_hamming,
-                n_bands=n_bands,
-            )
-            commit(pairs, pairs_root, batch_id)
-            commit(new_sh, sh_root, batch_id)
-        finally:
-            new_sh.unpersist()
-            corpus.unpersist()
-
-    docs = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(input_dir)
-    )
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _start_dedup_stream(
+        spark, input_dir, checkpoint_dir, state_dir, DOC_SCHEMA,
+        "hashes", _SIMHASH_SCHEMA,
+        lambda docs: simhash(docs, bits=bits),
+        lambda sh, corpus: incremental_simhash_pairs(
+            sh, corpus, bits=bits, max_hamming=max_hamming, n_bands=n_bands
+        ),
     )
 
 
@@ -445,177 +370,62 @@ def read_simhash_dedup_state(spark: SparkSession, state_dir: str):
     """(hashes, pairs) folded over every committed batch partition —
     hashes is the accumulated (doc_id, simhash) table, pairs the full
     near-dup pair graph (feed ``near_dedup_keep(ids, pairs=...)``).
-    Empty typed frames for tables with no committed partition yet, so
-    pollers never crash on a starting stream."""
-    import os
-
-    def read_or_empty(root, schema, cols):
-        if not os.path.isdir(root) or not any(
-            e.startswith("batch=") for e in os.listdir(root)
-        ):
-            return spark.createDataFrame([], schema)
-        return spark.read.parquet(root).select(*cols)
-
-    hashes = read_or_empty(
-        os.path.join(state_dir, "hashes"),
-        "doc_id long, simhash long",
-        ["doc_id", "simhash"],
+    Empty typed frames for tables with no committed partition yet."""
+    return (
+        state.read(spark, os.path.join(state_dir, "hashes"), _SIMHASH_SCHEMA),
+        state.read(
+            spark, os.path.join(state_dir, "pairs"), _SIMHASH_PAIRS_SCHEMA
+        ),
     )
-    pairs = read_or_empty(
-        os.path.join(state_dir, "pairs"),
-        "doc_a long, doc_b long, hamming long",
-        ["doc_a", "doc_b", "hamming"],
-    )
-    return hashes, pairs
 
 
 def read_near_dedup_state(spark: SparkSession, state_dir: str):
     """(signatures, pairs) DataFrames of the accumulated streaming
     near-dedup state — unions of the per-batch partitions. Empty typed
-    frames before the stream commits its first batch (or for whichever
-    table has no committed partition yet), so pollers never crash on a
-    starting stream."""
-    import os
-
-    def read_or_empty(root, schema, cols):
-        if not os.path.isdir(root) or not any(
-            e.startswith("batch=") for e in os.listdir(root)
-        ):
-            return spark.createDataFrame([], schema)
-        return spark.read.parquet(root).select(*cols)
-
-    sigs = read_or_empty(
-        os.path.join(state_dir, "signatures"),
-        "doc_id long, hsh array<bigint>, sig array<bigint>",
-        ["doc_id", "hsh", "sig"],
+    frames for tables with no committed partition yet."""
+    return (
+        state.read(spark, os.path.join(state_dir, "signatures"), _SIG_SCHEMA),
+        state.read(
+            spark, os.path.join(state_dir, "pairs"), _NEAR_PAIRS_SCHEMA
+        ),
     )
-    pairs = read_or_empty(
-        os.path.join(state_dir, "pairs"),
-        "doc_a long, doc_b long, est_ppm long, jaccard_ppm long",
-        ["doc_a", "doc_b", "est_ppm", "jaccard_ppm"],
-    )
-    return sigs, pairs
-
-
-COMPACTED_BATCH = -1  # below every real streaming batch id
 
 
 def compact_near_dedup_state(spark: SparkSession, state_dir: str) -> dict:
     """Consolidate the per-batch partitions of the streaming near-dedup
-    state into one — the compaction pass the append-structured store
-    needs: thousands of small per-batch directories become one
-    well-sized partition, a document RE-INGESTED under the same doc_id
-    in a later batch replaces its older signature row (latest batch
-    wins), and pairs whose member was re-ingested AFTER the pair was
-    verified are DROPPED — they certified the old content, and keeping
-    them would corrupt downstream keeper/split decisions about the
-    rewritten document.
-
-    The consolidated partition is named ``batch=-1`` — a value no
-    streaming batch can ever have, so a post-restart replay of the
-    last batch (which legitimately rewrites its OWN partition) can
-    never collide with, and destroy, the compacted history. Its rows
-    sort below every real batch in the keep-latest
+    state into one ``batch=-1`` partition per table — the compaction
+    pass the append-structured store needs: thousands of small
+    per-batch directories become one well-sized partition, a document
+    RE-INGESTED under the same doc_id in a later batch replaces its
+    older signature row (latest batch wins), and pairs whose member was
+    re-ingested AFTER the pair was verified are DROPPED — they
+    certified the old content, and keeping them would corrupt
+    downstream keeper/split decisions about the rewritten document.
+    The compacted rows sort below every real batch in the keep-latest
     ``max(struct(batch, …))``, so post-compaction batches still win.
 
-    Run while the stream is STOPPED. Commit order is
-    crash-recoverable: the consolidated partition is staged, any
-    previous ``batch=-1`` is set aside via atomic rename (restored at
-    the start of the next run if a crash strands it), the staging dir
-    renames in, and only then are the folded per-batch directories
-    cleared. A crash mid-clear leaves transient DUPLICATE rows (the
-    consolidated partition plus not-yet-removed originals) — benign
-    for keep-latest consumers and converged by rerunning compaction —
-    never an empty or shrunken state.
+    Run while the stream is STOPPED; crash-recoverable and idempotent
+    (:func:`~mod_reservoir_spark.streaming.state.compact`).
 
     Returns {"signatures": n_rows, "pairs": n_rows, "batches": n}.
     """
-    import os
-    import shutil
+    return _compact_id_pairs_state(
+        spark, state_dir, "signatures", "doc_id", ["hsh", "sig"],
+        ["est_ppm", "jaccard_ppm"],
+    )
 
-    stats = {}
-    n_batches = 0
-    latest_sig_batch = None
-    for table, key_cols, val_cols in (
-        ("signatures", ["doc_id"], ["hsh", "sig"]),
-        ("pairs", ["doc_a", "doc_b"], ["est_ppm", "jaccard_ppm"]),
-    ):
-        root = os.path.join(state_dir, table)
-        staging = os.path.join(root, ".staging-compact")
-        old_compact = os.path.join(root, ".old-compact")
-        final = os.path.join(root, f"batch={COMPACTED_BATCH}")
-        if not os.path.isdir(root):
-            stats[table] = 0
-            continue
-        # crash recovery: a stranded set-aside means the previous run
-        # died between set-aside and rename-in — restore it
-        if os.path.isdir(old_compact) and not os.path.isdir(final):
-            os.rename(old_compact, final)
-        for leftover in (staging, old_compact):
-            if os.path.isdir(leftover):
-                shutil.rmtree(leftover)
-        parts = sorted(
-            e for e in os.listdir(root) if e.startswith("batch=")
+
+def _keep_latest(df, key_cols: list[str], val_cols: list[str]):
+    """Per key, the values of the latest batch, plus that ``_batch``."""
+    return (
+        df.groupBy(*key_cols)
+        .agg(F.max(F.struct(F.col("batch"), *val_cols)).alias("_m"))
+        .select(
+            *key_cols,
+            F.col("_m.batch").alias("_batch"),
+            *[f"_m.{c}" for c in val_cols],
         )
-        n_batches = max(n_batches, len(parts))
-        if not parts:
-            stats[table] = 0
-            continue
-        df = spark.read.parquet(root)
-        latest = (
-            df.groupBy(*key_cols)
-            .agg(
-                F.max(F.struct(F.col("batch"), *val_cols)).alias("_m")
-            )
-            .select(
-                *key_cols,
-                F.col("_m.batch").alias("_batch"),
-                *[f"_m.{c}" for c in val_cols],
-            )
-        )
-        if table == "signatures":
-            # eagerly materialized: the pairs pass below consumes this
-            # AFTER the signature source directories are cleared, so
-            # the lineage back to those parquet files must be cut
-            latest_sig_batch = latest.select(
-                "doc_id", F.col("_batch").alias("_sig_batch")
-            ).localCheckpoint(eager=True)
-        elif latest_sig_batch is None:
-            # pairs-with-no-signature-partitions (crash between the
-            # first batch's two commits): no signature state means no
-            # pair is stale — skip the filter rather than crash
-            pass
-        else:
-            # drop pairs staler than either member's current content
-            for side in ("doc_a", "doc_b"):
-                latest = (
-                    latest.join(
-                        latest_sig_batch.select(
-                            F.col("doc_id").alias(side), "_sig_batch"
-                        ),
-                        side,
-                        "left",
-                    )
-                    .filter(
-                        F.col("_sig_batch").isNull()
-                        | (F.col("_batch") >= F.col("_sig_batch"))
-                    )
-                    .drop("_sig_batch")
-                )
-        out = latest.drop("_batch")
-        out.write.mode("overwrite").parquet(staging)
-        n_rows = spark.read.parquet(staging).count()
-        if os.path.isdir(final):
-            os.rename(final, old_compact)
-        os.rename(staging, final)
-        if os.path.isdir(old_compact):
-            shutil.rmtree(old_compact)
-        for p in parts:
-            if p != f"batch={COMPACTED_BATCH}":
-                shutil.rmtree(os.path.join(root, p))
-        stats[table] = n_rows
-    stats["batches"] = n_batches
-    return stats
+    )
 
 
 def _compact_id_pairs_state(
@@ -626,69 +436,33 @@ def _compact_id_pairs_state(
     id_vals: list[str],
     pair_vals: list[str],
 ) -> dict:
-    """Generic compactor for the (id-table, pairs) streaming-dedup
-    state shape — the :func:`compact_near_dedup_state` algorithm
-    (keep-latest per id, drop pairs staler than either member's
-    current content, ``batch=-1`` consolidated partition with the same
-    crash-recoverable rename dance) parameterized over table/column
-    names, so the simhash and semantic faces compact identically.
-    Run while the stream is STOPPED."""
-    import os
-    import shutil
+    """Compactor for the (id table, pairs) dedup state shape, shared
+    by the near-dup, simhash and semantic faces: keep-latest per id,
+    drop pairs staler than either member's current content. Run while
+    the stream is STOPPED."""
+    id_batch = None
 
-    stats = {}
-    n_batches = 0
-    latest_id_batch = None
-    for table, key_cols, val_cols in (
-        (id_table, [id_key], id_vals),
-        ("pairs", ["doc_a", "doc_b"], pair_vals),
-    ):
-        root = os.path.join(state_dir, table)
-        staging = os.path.join(root, ".staging-compact")
-        old_compact = os.path.join(root, ".old-compact")
-        final = os.path.join(root, f"batch={COMPACTED_BATCH}")
-        if not os.path.isdir(root):
-            stats[table] = 0
-            continue
-        if os.path.isdir(old_compact) and not os.path.isdir(final):
-            os.rename(old_compact, final)
-        for leftover in (staging, old_compact):
-            if os.path.isdir(leftover):
-                shutil.rmtree(leftover)
-        parts = sorted(
-            e for e in os.listdir(root) if e.startswith("batch=")
-        )
-        n_batches = max(n_batches, len(parts))
-        if not parts:
-            stats[table] = 0
-            continue
-        df = spark.read.parquet(root)
-        latest = (
-            df.groupBy(*key_cols)
-            .agg(F.max(F.struct(F.col("batch"), *val_cols)).alias("_m"))
-            .select(
-                *key_cols,
-                F.col("_m.batch").alias("_batch"),
-                *[f"_m.{c}" for c in val_cols],
-            )
-        )
-        if table == id_table:
-            latest_id_batch = latest.select(
-                id_key, F.col("_batch").alias("_id_batch")
-            ).localCheckpoint(eager=True)
-        elif latest_id_batch is None:
-            # pairs committed but the id table has no partitions yet —
-            # reachable when a crash lands between the two commits of
-            # the FIRST batch (process() writes pairs before ids). No
-            # id state means no pair can be stale; the left-join
-            # staleness filter would keep everything, so skip it
-            # instead of dereferencing None (ADVICE r7).
-            pass
-        else:
+    def fold_ids(df):
+        nonlocal id_batch
+        latest = _keep_latest(df, [id_key], id_vals)
+        # eagerly materialized: the pairs fold consumes this AFTER the
+        # id table's partitions are cleared, so the lineage back to
+        # those parquet files must be cut
+        id_batch = latest.select(
+            id_key, F.col("_batch").alias("_id_batch")
+        ).localCheckpoint(eager=True)
+        return latest.drop("_batch")
+
+    def fold_pairs(df):
+        latest = _keep_latest(df, ["doc_a", "doc_b"], pair_vals)
+        # id_batch is None when pairs were committed but the id table
+        # has no partitions — a crash between the FIRST batch's two
+        # commits. No id state means no pair can be stale.
+        if id_batch is not None:
             for side in ("doc_a", "doc_b"):
                 latest = (
                     latest.join(
-                        latest_id_batch.select(
+                        id_batch.select(
                             F.col(id_key).alias(side), "_id_batch"
                         ),
                         side,
@@ -700,18 +474,15 @@ def _compact_id_pairs_state(
                     )
                     .drop("_id_batch")
                 )
-        out = latest.drop("_batch")
-        out.write.mode("overwrite").parquet(staging)
-        n_rows = spark.read.parquet(staging).count()
-        if os.path.isdir(final):
-            os.rename(final, old_compact)
-        os.rename(staging, final)
-        if os.path.isdir(old_compact):
-            shutil.rmtree(old_compact)
-        for p in parts:
-            if p != f"batch={COMPACTED_BATCH}":
-                shutil.rmtree(os.path.join(root, p))
-        stats[table] = n_rows
+        return latest.drop("_batch")
+
+    stats = {}
+    n_batches = 0
+    for table, fold in ((id_table, fold_ids), ("pairs", fold_pairs)):
+        stats[table], n = state.compact(
+            spark, os.path.join(state_dir, table), fold
+        )
+        n_batches = max(n_batches, n)
     stats["batches"] = n_batches
     return stats
 
@@ -728,23 +499,6 @@ def compact_simhash_dedup_state(
     )
 
 
-def _commit_sketch_partition(df, root: str, batch_id: int) -> None:
-    """Stage + atomically rename one per-batch register partition; a
-    replayed batch rewrites ITS OWN partition with identical rows (the
-    streaming_near_dedup state contract). Immutable committed
-    partitions mean no crash window can lose earlier batches and no
-    reader can race a deletion."""
-    import os
-    import shutil
-
-    staging = os.path.join(root, f".staging-{batch_id}")
-    final = os.path.join(root, f"batch={batch_id}")
-    df.write.mode("overwrite").parquet(staging)
-    if os.path.isdir(final):
-        shutil.rmtree(final)
-    os.rename(staging, final)
-
-
 def streaming_hll(
     spark: SparkSession,
     input_dir: str,
@@ -759,68 +513,56 @@ def streaming_hll(
     ingest time (how many distinct values has this stream EVER carried,
     per group, answerable at any moment without rescanning history).
 
-    Each micro-batch APPENDS its own bounded register partition
-    (``regs/batch=<id>/``, ≤ groups × m rows) and the current sketch is
-    the max-merge over partitions at read time: registers are
+    Each micro-batch commits its own bounded register partition under
+    ``regs/`` (≤ groups × m rows) and the current sketch is the
+    max-merge over partitions at read time: registers are
     md5-deterministic and max-merge is idempotent and associative, so
     the folded state EXACTLY equals the batch `hll_registers` over
-    everything ingested (pinned by test) and an at-least-once replay —
-    which rewrites its own partition with identical rows — changes
-    nothing. Committed partitions are immutable: no crash window can
-    drop earlier batches and no concurrent reader can race a deletion.
-    State grows one bounded partition per batch; fold occasionally by
-    reading the state and rewriting a single partition if partition
-    count ever matters.
+    everything ingested (pinned by test) and an at-least-once replay
+    changes nothing. State grows one bounded partition per batch.
 
     ``schema``: the stream's JSONL schema (default DOC_SCHEMA —
     doc_id/text); pass one containing your ``group_cols`` when
     grouping, e.g. ``"doc_id long, lang string, text string"``.
     """
-    import os
-
     from mod_reservoir_spark.pipeline.sketches import hll_registers
 
     root = os.path.join(state_dir, "regs")
 
     def process(batch_df, batch_id):
-        _commit_sketch_partition(
+        state.commit(
             hll_registers(batch_df, value_col, group_cols, m),
             root,
             batch_id,
         )
 
-    docs = (
-        spark.readStream.schema(schema or DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(input_dir)
+    return state.start_file_stream(
+        spark, input_dir, checkpoint_dir, schema or DOC_SCHEMA, process
     )
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+
+
+def _register_schema(group_cols: tuple[str, ...], cols: str) -> str:
+    # group columns typed string: before the first commit there is no
+    # data to derive richer types from
+    return ", ".join([*(f"{g} string" for g in group_cols), cols])
 
 
 def read_hll_state(
     spark: SparkSession, state_dir: str, group_cols: tuple[str, ...] = ()
 ):
-    """The accumulated register table: per-batch partitions max-merged
-    into one (pipeline.sketches.hll_merge). Empty typed frame before
-    the first commit — group columns typed string there (no data to
-    derive richer types from yet)."""
-    import os
-
+    """The accumulated register table per ``group_cols`` (a subset of
+    the stream's group columns; omitted ones are merged over):
+    per-batch partitions max-merged into one
+    (pipeline.sketches.hll_merge). Empty typed frame before the first
+    commit."""
     from mod_reservoir_spark.pipeline.sketches import hll_merge
 
-    root = os.path.join(state_dir, "regs")
-    if not os.path.isdir(root) or not any(
-        e.startswith("batch=") for e in os.listdir(root)
-    ):
-        schema = ", ".join(
-            [*(f"{g} string" for g in group_cols), "bucket long, r long"]
-        )
-        return spark.createDataFrame([], schema)
-    return hll_merge(spark.read.parquet(root).drop("batch"))
+    regs = state.read(
+        spark,
+        os.path.join(state_dir, "regs"),
+        _register_schema(group_cols, "bucket long, r long"),
+    )
+    return hll_merge(regs)
 
 
 def streaming_cm(
@@ -835,7 +577,7 @@ def streaming_cm(
     schema=None,
 ):
     """Streaming frequency maintenance: the Count-Min sibling of
-    :func:`streaming_hll`, same per-batch-partition state contract —
+    :func:`streaming_hll`, same per-batch-partition state —
     CM's add-merge is not idempotent across DIFFERENT batches, but a
     replayed batch rewriting its own partition with identical rows is.
     Per-batch write volume is the bounded register table
@@ -843,50 +585,35 @@ def streaming_cm(
     partitions with the engine's ``cm_merge``. ``schema``: see
     :func:`streaming_hll`.
     """
-    import os
-
     from mod_reservoir_spark.pipeline.sketches import cm_registers
 
     root = os.path.join(state_dir, "regs")
 
     def process(batch_df, batch_id):
-        _commit_sketch_partition(
+        state.commit(
             cm_registers(batch_df, value_col, group_cols, depth, width)
             .withColumn("d", F.col("d").cast("long")),
             root,
             batch_id,
         )
 
-    docs = (
-        spark.readStream.schema(schema or DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(input_dir)
-    )
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return state.start_file_stream(
+        spark, input_dir, checkpoint_dir, schema or DOC_SCHEMA, process
     )
 
 
 def read_cm_state(
     spark: SparkSession, state_dir: str, group_cols: tuple[str, ...] = ()
 ):
-    """The accumulated Count-Min register table: per-batch partitions
-    add-merged into one via ``pipeline.sketches.cm_merge`` — empty
-    typed frame before the first commit (group columns typed string
-    there, matching the written long-typed d/cell/c)."""
-    import os
-
+    """The accumulated Count-Min register table per ``group_cols`` (see
+    :func:`read_hll_state`): per-batch partitions add-merged into one
+    via ``pipeline.sketches.cm_merge`` — empty typed frame before the
+    first commit."""
     from mod_reservoir_spark.pipeline.sketches import cm_merge
 
-    root = os.path.join(state_dir, "regs")
-    if not os.path.isdir(root) or not any(
-        e.startswith("batch=") for e in os.listdir(root)
-    ):
-        schema = ", ".join(
-            [*(f"{g} string" for g in group_cols),
-             "d long, cell long, c long"]
-        )
-        return spark.createDataFrame([], schema)
-    return cm_merge(spark.read.parquet(root).drop("batch"))
+    regs = state.read(
+        spark,
+        os.path.join(state_dir, "regs"),
+        _register_schema(group_cols, "d long, cell long, c long"),
+    )
+    return cm_merge(regs)

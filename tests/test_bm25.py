@@ -286,9 +286,7 @@ def test_streaming_text_index_equals_batch_and_survives_replay(
     # the foreachBatch commit path again with the same batch id — the
     # partition is rewritten with identical rows, the fold unchanged.
     from mod_reservoir_spark.pipeline.text import build_text_index
-    from mod_reservoir_spark.streaming.windowed import (
-        _commit_sketch_partition,
-    )
+    from mod_reservoir_spark.streaming.state import commit
 
     replay_df = spark.createDataFrame(
         batches[1], "doc_id long, text string"
@@ -297,8 +295,8 @@ def test_streaming_text_index_equals_batch_and_survives_replay(
     p1 = p1.localCheckpoint(eager=True)
     import os
 
-    _commit_sketch_partition(p1, os.path.join(state, "postings"), 1)
-    _commit_sketch_partition(
+    commit(p1, os.path.join(state, "postings"), 1)
+    commit(
         s1.select("n_docs", "sum_dl"), os.path.join(state, "stats"), 1
     )
     check_state()

@@ -320,7 +320,7 @@ def test_streaming_curate_out_of_order_invariants(spark, tmp_path):
         assert got[d] in ("exact_dup", "near_dup"), (d, got[d])
 
 
-@pytest.mark.exhaustive  # state compaction path untouched since r11; compaction also pinned for the dedup states in test_windowed_streaming
+@pytest.mark.exhaustive  # the shared compactor (streaming/state.compact) and the first-seen fold are pinned without a stream in test_stream_state; this re-runs a full stream around a compaction
 def test_compact_curate_state_continues_identically(spark, tmp_path):
     """compact_curate_state folds per-batch partitions into batch=-1
     with FIRST-SEEN-WINS, after which continuing the stream yields the

@@ -182,12 +182,10 @@ def test_stream_lm_prefix_fold_equals_batch_and_serves(spark, tmp_path):
 
     # replay: rewrite the LAST batch's partition -> fold unchanged
     from mod_reservoir_spark.pipeline.lm_model import build_lm_prefix as blp
-    from mod_reservoir_spark.streaming.windowed import (
-        _commit_sketch_partition,
-    )
+    from mod_reservoir_spark.streaming.state import commit
 
     last = spark.createDataFrame(rows[2::3], "doc_id long, text string")
-    _commit_sketch_partition(
+    commit(
         blp(last, 3), os.path.join(state, "prefix"), 2
     )
     refolded = set(

@@ -68,15 +68,13 @@ def test_stream_pq_index_equals_batch_replay_and_serving(spark, tmp_path):
     # REPLAY: at-least-once redelivery of batch 1 — identical rows,
     # fold unchanged (index rows are a pure function of the batch
     # under frozen codebooks/centroids)
-    from mod_reservoir_spark.streaming.windowed import (
-        _commit_sketch_partition,
-    )
+    from mod_reservoir_spark.streaming.state import commit
 
     replay_df = spark.createDataFrame(
         batches[1], "vec_id long, embedding array<double>"
     )
     replay_idx = pq_index(replay_df, cb, cents).localCheckpoint(eager=True)
-    _commit_sketch_partition(replay_idx, os.path.join(state, "index"), 1)
+    commit(replay_idx, os.path.join(state, "index"), 1)
     check_state()
 
     # COMPACTION + SERVING: the cell-partitioned layout answers

@@ -682,9 +682,7 @@ def test_streaming_semantic_dedup_equivalence_and_replay(spark, tmp_path):
     # batch's own ids — and rewrite partition 1. The rewritten
     # partition must be ROW-IDENTICAL to the original (not merely
     # set-stable after folding), and the fold unchanged.
-    from mod_reservoir_spark.streaming.windowed import (
-        _commit_sketch_partition,
-    )
+    from mod_reservoir_spark.streaming.state import commit
 
     def part1_rows():
         return sorted(
@@ -714,10 +712,10 @@ def test_streaming_semantic_dedup_equivalence_and_replay(spark, tmp_path):
     replay_pairs = cell_cosine_pairs(b1_ev, b1_ev, threshold).unionByName(
         cell_cosine_pairs(b1_ev, corpus_ev, threshold, self_join=False)
     ).localCheckpoint(eager=True)
-    _commit_sketch_partition(
+    commit(
         replay_pairs, os.path.join(state, "pairs"), 1
     )
-    _commit_sketch_partition(
+    commit(
         b1_ev.select("vec_id", "cell", "v"),
         os.path.join(state, "members"),
         1,
@@ -813,11 +811,9 @@ def test_streaming_simhash_dedup_equals_batch(spark, tmp_path):
     replay = incremental_simhash_pairs(
         new_sh, corpus, bits=24, max_hamming=3
     ).localCheckpoint(eager=True)
-    from mod_reservoir_spark.streaming.windowed import (
-        _commit_sketch_partition,
-    )
+    from mod_reservoir_spark.streaming.state import commit
 
-    _commit_sketch_partition(replay, os.path.join(state, "pairs"), 1)
+    commit(replay, os.path.join(state, "pairs"), 1)
     assert folded() == want
 
 
@@ -834,8 +830,8 @@ def test_compact_simhash_and_semantic_states(spark, tmp_path):
         compact_semantic_dedup_state,
         read_semantic_dedup_state,
     )
+    from mod_reservoir_spark.streaming.state import commit
     from mod_reservoir_spark.streaming.windowed import (
-        _commit_sketch_partition,
         compact_simhash_dedup_state,
         read_simhash_dedup_state,
     )
@@ -856,10 +852,10 @@ def test_compact_simhash_and_semantic_states(spark, tmp_path):
     p1 = spark.createDataFrame(
         [(1, 3, 0)], "doc_a long, doc_b long, hamming long"
     )
-    _commit_sketch_partition(h0, os.path.join(sh_state, "hashes"), 0)
-    _commit_sketch_partition(p0, os.path.join(sh_state, "pairs"), 0)
-    _commit_sketch_partition(h1, os.path.join(sh_state, "hashes"), 1)
-    _commit_sketch_partition(p1, os.path.join(sh_state, "pairs"), 1)
+    commit(h0, os.path.join(sh_state, "hashes"), 0)
+    commit(p0, os.path.join(sh_state, "pairs"), 0)
+    commit(h1, os.path.join(sh_state, "hashes"), 1)
+    commit(p1, os.path.join(sh_state, "pairs"), 1)
 
     stats = compact_simhash_dedup_state(spark, sh_state)
     assert stats == {"hashes": 3, "pairs": 1, "batches": 2}
@@ -889,10 +885,10 @@ def test_compact_simhash_and_semantic_states(spark, tmp_path):
         [(2, 1, [0.0, 1.0])], "vec_id long, cell int, v array<double>"
     )
     q1 = spark.createDataFrame([], "doc_a long, doc_b long")
-    _commit_sketch_partition(m0, os.path.join(sem_state, "members"), 0)
-    _commit_sketch_partition(q0, os.path.join(sem_state, "pairs"), 0)
-    _commit_sketch_partition(m1, os.path.join(sem_state, "members"), 1)
-    _commit_sketch_partition(q1, os.path.join(sem_state, "pairs"), 1)
+    commit(m0, os.path.join(sem_state, "members"), 0)
+    commit(q0, os.path.join(sem_state, "pairs"), 0)
+    commit(m1, os.path.join(sem_state, "members"), 1)
+    commit(q1, os.path.join(sem_state, "pairs"), 1)
 
     stats = compact_semantic_dedup_state(spark, sem_state)
     assert stats == {"members": 2, "pairs": 0, "batches": 2}
@@ -909,8 +905,8 @@ def test_compact_pairs_only_state(spark, tmp_path):
     AttributeError on the missing id state (ADVICE r7)."""
     import os
 
+    from mod_reservoir_spark.streaming.state import commit
     from mod_reservoir_spark.streaming.windowed import (
-        _commit_sketch_partition,
         compact_simhash_dedup_state,
         read_simhash_dedup_state,
     )
@@ -919,7 +915,7 @@ def test_compact_pairs_only_state(spark, tmp_path):
     p0 = spark.createDataFrame(
         [(1, 2, 1)], "doc_a long, doc_b long, hamming long"
     )
-    _commit_sketch_partition(p0, os.path.join(state, "pairs"), 0)
+    commit(p0, os.path.join(state, "pairs"), 0)
     # no hashes table at all
     stats = compact_simhash_dedup_state(spark, state)
     assert stats == {"hashes": 0, "pairs": 1, "batches": 1}
@@ -928,7 +924,7 @@ def test_compact_pairs_only_state(spark, tmp_path):
     # hashes dir exists but holds zero batch partitions — same path
     state2 = str(tmp_path / "crash2")
     os.makedirs(os.path.join(state2, "hashes"))
-    _commit_sketch_partition(p0, os.path.join(state2, "pairs"), 0)
+    commit(p0, os.path.join(state2, "pairs"), 0)
     stats2 = compact_simhash_dedup_state(spark, state2)
     assert stats2["pairs"] == 1
 
