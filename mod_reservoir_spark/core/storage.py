@@ -8,15 +8,12 @@ each as a deterministic snapshot transformation; counters (inserted /
 updated / deleted / ignored) come from snapshot diffs, not per-row
 return values (SURVEY.md §7 risk 2).
 
-Physical layout for scale (100 TB target):
-- ``global_records`` written partitioned by ``source_id`` — ingest and
-  delete are per-source, so both prune to one partition;
-- cluster tables repartitioned by ``cluster_id`` before write so
-  assembly joins co-locate;
-- all writes go through a temp-dir + rename pattern is NOT needed:
-  parquet overwrite of a snapshot dir is atomic enough for the test
-  harness, and on a real deployment these tables live in Delta/Iceberg
-  (jars not in this image — gated behind import-try).
+Physical layout: ``global_records`` is written partitioned by
+``source_id`` — ingest and delete are per-source, so both prune to one
+partition. The cluster tables are written as their rows come, with no
+repartitioning. Every write is a commit: it lands in a fresh version
+directory and becomes visible through one atomic pointer swap
+(``Warehouse``), so a failed write leaves the previous snapshot whole.
 """
 
 from __future__ import annotations
@@ -158,8 +155,22 @@ def upsert_records(
     processes records in arrival order; we take the last per key via a
     window over ingest order).
 
-    Returns (new snapshot, {"inserted": n, "updated": n, "ignored": n}).
+    Returns (new snapshot, {"inserted": n, "updated": n}).
     """
+    merged, flagged = _upsert(existing, incoming, now)
+    row = flagged.agg(
+        F.count_if(F.col("_had").isNull()).alias("inserted"),
+        F.count_if(F.col("_had").isNotNull()).alias("updated"),
+    ).first()
+    return merged, {"inserted": row["inserted"], "updated": row["updated"]}
+
+
+def _upsert(
+    existing: DataFrame, incoming: DataFrame, now=None
+) -> tuple[DataFrame, DataFrame]:
+    """The plan of ``upsert_records`` without its counts: (new
+    snapshot, the incoming rows kept per key with ``_had`` true where
+    the key was already stored and null where it is new)."""
     now = now if now is not None else F.current_timestamp()
     inc = incoming.withColumn(
         "_ord", F.monotonically_increasing_id()
@@ -173,13 +184,11 @@ def upsert_records(
         .withColumn("updated_at", now)
     )
     prev_keys = existing.select(*NATURAL_KEY).withColumn("_had", F.lit(True))
-    inc_stats = inc.join(prev_keys, NATURAL_KEY, "left")
-    inserted = inc_stats.filter(F.col("_had").isNull()).count()
-    updated = inc_stats.filter(F.col("_had").isNotNull()).count()
+    flagged = inc.join(prev_keys, NATURAL_KEY, "left")
     merged = existing.join(
         inc.select(*NATURAL_KEY), NATURAL_KEY, "left_anti"
     ).unionByName(inc.select(*existing.columns))
-    return merged, {"inserted": inserted, "updated": updated}
+    return merged, flagged
 
 
 def delete_records(

@@ -66,10 +66,12 @@ LAST_RUN_STATS: dict = {}
 # dwarfs the data work on small graphs — and near-dup PAIR graphs are
 # small relative to their corpus by construction (seconds per funnel
 # run at bench scale, guide §1.2 "don't pay shuffles the data doesn't
-# need"). The gate reads the MEASURED edge count the loop already
-# paid for — at 100 TB a billion-edge graph stays on the iterative
-# path untouched (the MAX_BROADCAST_QUERIES cutover pattern). 100k
-# edge rows collect to ~10 MB — far under any driver limit.
+# need"). The gate is one bounded collect of at most max + 1 edge
+# rows — at 100 TB a billion-edge graph stays on the iterative path
+# untouched (the MAX_BROADCAST_QUERIES cutover pattern). 100k edge
+# rows collect to ~10 MB — far under any driver limit. Incremental
+# re-clustering (streaming/ingest.py) uses the same bound for the
+# affected subgraph it collects.
 DRIVER_CC_MAX_EDGES = 100_000
 
 
@@ -163,7 +165,6 @@ def connected_components(
     contract. ``LAST_RUN_STATS`` reports ``iterations=0`` and
     ``path="driver"`` for fast-path runs.
     """
-    log = logging.getLogger(__name__)
     if driver_max_edges is None:
         driver_max_edges = DRIVER_CC_MAX_EDGES
     e = edges.select(
@@ -171,12 +172,14 @@ def connected_components(
     )
     if dedupe_edges:
         e = e.dropDuplicates(["_n", "_v"])
-    e = e.persist()
-    n_edges = e.count()  # also materializes the cache before the loop
 
-    if n_edges <= driver_max_edges:
-        rows = [(r[0], r[1]) for r in e.collect()]
-        if all(n is not None and v is not None for n, v in rows):
+    if driver_max_edges > 0:
+        # one action: at most max + 1 rows reach the driver, and more
+        # than max of them sends the graph down the iterative path
+        rows = [(r[0], r[1]) for r in e.limit(driver_max_edges + 1).collect()]
+        if len(rows) <= driver_max_edges and all(
+            n is not None and v is not None for n, v in rows
+        ):
             from pyspark.sql.types import StructField, StructType
 
             ntype = e.schema[0].dataType
@@ -189,21 +192,44 @@ def connected_components(
                     ]
                 ),
             )
-            e.unpersist()
-            log.info(
-                "connected_components: %d edges, driver union-find path",
-                n_edges,
-            )
-            LAST_RUN_STATS.update(
-                edges=n_edges,
-                iterations=0,
-                converged=True,
-                path="driver",
-                runs=LAST_RUN_STATS.get("runs", 0) + 1,
-                total_iterations=LAST_RUN_STATS.get("total_iterations", 0),
-            )
+            _record_driver_run(len(rows))
             return out
     LAST_RUN_STATS.pop("path", None)
+    e = e.persist()
+    try:
+        return _iterative_components(
+            e, node_col, component_col, max_iterations, on_nonconverged
+        )
+    finally:
+        e.unpersist()
+
+
+def _record_driver_run(n_edges: int) -> None:
+    """Telemetry of a run solved by ``_driver_components``."""
+    logging.getLogger(__name__).info(
+        "connected_components: %d edges, driver union-find path", n_edges
+    )
+    LAST_RUN_STATS.update(
+        edges=n_edges,
+        iterations=0,
+        converged=True,
+        path="driver",
+        runs=LAST_RUN_STATS.get("runs", 0) + 1,
+        total_iterations=LAST_RUN_STATS.get("total_iterations", 0),
+    )
+
+
+def _iterative_components(
+    e: DataFrame,
+    node_col: str,
+    component_col: str,
+    max_iterations: int,
+    on_nonconverged: str,
+) -> DataFrame:
+    """The distributed min-label fixpoint over the persisted (_n, _v)
+    edge frame ``e``; the caller releases ``e``."""
+    log = logging.getLogger(__name__)
+    n_edges = e.count()  # also materializes the cache before the loop
     # Seed with the first hop unrolled: comp(n) = min over n's values of
     # the value's min node (with identity labels the first loop pass
     # computes exactly this, so seeding saves one full iteration —
@@ -280,7 +306,6 @@ def connected_components(
         if changed == 0:
             converged = True
             break
-    e.unpersist()
     log.info(
         "connected_components: %d edges, converged=%s in %d iteration(s)"
         " (max %d)",

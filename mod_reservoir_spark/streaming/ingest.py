@@ -9,27 +9,45 @@ exactly the clusters whose membership changed — reproducing the
 observable invariant (datestamp bumps on insert/update/delete/merge)
 without per-row locking.
 
-Scale note: `ingest_batch` restricts the per-batch recompute to the
-components the batch can actually change (`affected_subgraph`): CC
-iterations — the multi-pass, shuffle-heavy part — run only over the
-affected subgraph, so a 10k-record batch against a 36M-record pool
-re-clusters thousands of rows, not millions. The remaining full-table
-work is a constant number of single-pass joins (no iteration), which
-at cluster scale co-locate if `cluster_assignments` and
-`record_match_values` are bucketed by `global_id`.
+Scale note: a batch re-clusters only the components it can change
+(the closure in `affected_subgraph`). When the batch and that subgraph
+fit the driver bound (`clustering.DRIVER_CC_MAX_EDGES` rows), they are
+collected once: the upsert, the stats, CC, the changed clusters and the
+meta delta are computed on the driver, and each table is written as
+one scan of its stored snapshot minus the affected keys plus the local
+rows — a small batch costs a few dozen Spark jobs whatever the
+warehouse size, and no frame is cached on top of another. Above the
+bound, the same steps run as Spark joins over the affected subgraph
+only (CC iterations never touch unaffected components).
 `initialize_pool` remains the full rebuild (new/changed configs).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from typing import NamedTuple
 
-from mod_reservoir_spark.core.storage import Warehouse, upsert_records
+from pyspark.sql import Column, DataFrame, functions as F
+
+from mod_reservoir_spark.core.model import (
+    CLUSTER_ASSIGNMENTS_SCHEMA,
+    RECORD_MATCH_VALUES_SCHEMA,
+)
+from mod_reservoir_spark.core.storage import (
+    NATURAL_KEY,
+    Warehouse,
+    _upsert,
+    deterministic_global_id,
+    normalize_source_ids,
+)
+from mod_reservoir_spark.operators import clustering
 from mod_reservoir_spark.operators.clustering import (
+    _driver_components,
+    _record_driver_run,
     cluster_all_pools,
     truncate_match_values,
 )
 from mod_reservoir_spark.operators.matchkeys import extract_match_values
+from mod_reservoir_spark.streaming.windowed import _held
 
 
 def changed_clusters(
@@ -125,10 +143,7 @@ def affected_subgraph(
       pre-config records — degrades to a full rebuild exactly when
       one is needed).
     """
-    pools = F.explode(
-        F.array(*[F.lit(p) for p in pool_ids])
-    ).alias("match_key_config_id")
-    batch_pools = batch_ids.select("global_id", pools)
+    batch_pools = batch_ids.select("global_id", _pools(pool_ids))
 
     old_pool_assign = old_assign.filter(
         F.col("match_key_config_id").isin(pool_ids)
@@ -148,7 +163,7 @@ def affected_subgraph(
         seed_clusters, ["match_key_config_id", "cluster_id"], "left_semi"
     ).select("global_id", "match_key_config_id")
 
-    unassigned = all_record_ids.select("global_id", pools).join(
+    unassigned = all_record_ids.select("global_id", _pools(pool_ids)).join(
         old_pool_assign,
         ["global_id", "match_key_config_id"],
         "left_anti",
@@ -175,69 +190,161 @@ def ingest_batch(
     """
     now_col = now if now is not None else F.current_timestamp()
     existing = wh.read("global_records")
+    keys = ["local_id", "source_id"]
 
-    from mod_reservoir_spark.core.storage import normalize_source_ids
-
-    # persist the batch: its lineage may be expensive (binaryFile scan
-    # + MARC decode for uploads, streaming file source for
-    # foreachBatch), and the counts/joins below would otherwise re-run
-    # it once per action (~a dozen times)
-    incoming = normalize_source_ids(incoming).persist()
-    processed = incoming.count()
-    tombstones = incoming.filter(F.col("delete") == True)  # noqa: E712
-    upserts = incoming.filter(
-        F.col("delete").isNull() | (F.col("delete") == False)  # noqa: E712
-    ).drop("delete")
-
-    merged, stats = upsert_records(existing, upserts, now_col)
-    # tombstone: remove every version of (local_id, source_id)
-    merged = merged.join(
-        tombstones.select("local_id", "source_id").distinct(),
-        ["local_id", "source_id"],
-        "left_anti",
-    )
-    deleted = existing.join(
-        tombstones.select("local_id", "source_id").distinct(),
-        ["local_id", "source_id"],
-        "left_semi",
-    ).count()
-
-    wh.write("global_records", merged, partition_by=["source_id"])
-    # read back the committed snapshot: downstream plans scan the new
-    # parquet version instead of recomputing the upsert joins, and the
-    # versioned store keeps `existing`'s snapshot readable, so the
-    # pre-write plans below stay valid (no eager materialization)
-    merged = wh.read("global_records")
-
-    # the batch's global ids: upserted rows (post-merge, so new records
-    # have their ids) plus every version the tombstones removed
-    batch_keys = incoming.select("local_id", "source_id").distinct()
-    batch_ids = (
-        merged.join(batch_keys, ["local_id", "source_id"], "left_semi")
-        .select("global_id")
-        .unionByName(
-            existing.join(
-                tombstones.select("local_id", "source_id").distinct(),
-                ["local_id", "source_id"],
-                "left_semi",
-            ).select("global_id")
+    with _held() as hold:
+        # persist the batch: its lineage may be expensive (binaryFile
+        # scan + MARC decode for uploads, streaming file source for
+        # foreachBatch), and every step below reads it. `_ord` is the
+        # arrival order: the last row of a natural key wins
+        incoming = hold(
+            normalize_source_ids(incoming).withColumn(
+                "_ord", F.monotonically_increasing_id()
+            )
         )
-        .distinct()
-    )
+        local = _local_upsert(existing, incoming, now_col)
+        if local is not None:
+            merged, stats, ids = local
+            batch_ids = _local_frame(
+                wh, [(g,) for g in sorted(ids)], "global_id string"
+            )
+        else:
+            tombstones = (
+                incoming.filter(F.col("delete") == True)  # noqa: E712
+                .select(*keys)
+                .distinct()
+            )
+            upserts = incoming.filter(
+                F.col("delete").isNull() | (F.col("delete") == False)  # noqa: E712
+            ).drop("delete")
+            merged, flagged = _upsert(existing, upserts, now_col)
+            # tombstone: remove every version of (local_id, source_id)
+            merged = merged.join(tombstones, keys, "left_anti")
+            gone = existing.join(tombstones, keys, "left_semi")
+            stats = _batch_stats(incoming, flagged, gone)
+            # the batch's global ids: every stored version of a batch
+            # key, and the upserted rows no tombstone removes
+            batch_ids = (
+                existing.join(incoming.select(*keys), keys, "left_semi")
+                .select("global_id")
+                .unionByName(
+                    flagged.join(tombstones, keys, "left_anti").select(
+                        "global_id"
+                    )
+                )
+                .distinct()
+            )
 
-    ingest_configs = [
-        c for c in configs if (c.get("update") or "ingest") == "ingest"
-    ]
-    stats_out = {
-        "processed": processed,
-        "inserted": stats["inserted"],
-        "updated": stats["updated"],
-        "deleted": deleted,
+        wh.write("global_records", merged, partition_by=["source_id"])
+        # read back the committed snapshot: downstream plans scan the
+        # new parquet version instead of recomputing the upsert joins,
+        # and the versioned store keeps `existing`'s snapshot readable
+        merged = wh.read("global_records")
+        ingest_configs = [
+            c for c in configs if (c.get("update") or "ingest") == "ingest"
+        ]
+        if ingest_configs:
+            recluster_pools(
+                wh, merged, ingest_configs, now_col, batch_ids=batch_ids
+            )
+    return stats
+
+
+def _local_upsert(
+    existing: DataFrame, incoming: DataFrame, now: Column
+) -> tuple[DataFrame, dict, set] | None:
+    """The upsert of a small batch from its keys, collected to the
+    driver with the stored rows that share a (local_id, source_id):
+    (new snapshot, stats, the batch's global ids). The snapshot is the
+    stored one minus the replaced and tombstoned keys, plus the kept
+    incoming rows, so writing it is one scan of each. None when the
+    batch or its stored rows are over ``DRIVER_CC_MAX_EDGES`` rows, or
+    a key is null or holds the key separator (the Spark path's join
+    semantics then apply)."""
+    limit = clustering.DRIVER_CC_MAX_EDGES
+
+    def clean(rows) -> bool:
+        return len(rows) <= limit and all(
+            v is not None and _SEP not in str(v)
+            for r in rows
+            for v in (r.local_id, r.source_id, r.source_version)
+        )
+
+    rows = (
+        incoming.select(*NATURAL_KEY, "delete", "_ord")
+        .withColumn("global_id", deterministic_global_id())
+        .limit(limit + 1)
+        .collect()
+    )
+    if not clean(rows):
+        return None
+    pairs = {(r.local_id, r.source_id) for r in rows}
+    stored = (
+        existing.filter(
+            F.col("source_id").isin(sorted({s for _, s in pairs}))
+            & _key("local_id", "source_id").isin(_key_strs(pairs))
+        )
+        .select("global_id", *NATURAL_KEY)
+        .limit(limit + 1)
+        .collect()
+    )
+    if not clean(stored):
+        return None
+
+    tombs = {(r.local_id, r.source_id) for r in rows if r.delete}
+    kept = {}  # natural key -> its last upsert row
+    for r in sorted((r for r in rows if not r.delete), key=lambda r: r._ord):
+        kept[(r.local_id, r.source_id, r.source_version)] = r
+    had = {(r.local_id, r.source_id, r.source_version) for r in stored}
+    stats = {
+        "processed": len(rows),
+        "inserted": sum(k not in had for k in kept),
+        "updated": sum(k in had for k in kept),
+        "deleted": sum((r.local_id, r.source_id) in tombs for r in stored),
     }
-    if ingest_configs:
-        recluster_pools(wh, merged, ingest_configs, now_col, batch_ids=batch_ids)
-    incoming.unpersist()
-    return stats_out
+    live = [r for k, r in kept.items() if k[:2] not in tombs]
+    ids = {r.global_id for r in stored} | {r.global_id for r in live}
+
+    merged = existing.filter(
+        ~_key(*NATURAL_KEY).isin(_key_strs(kept))
+        & ~_key("local_id", "source_id").isin(_key_strs(tombs))
+    ).unionByName(
+        incoming.filter(F.col("_ord").isin(sorted(r._ord for r in live)))
+        .withColumn("global_id", deterministic_global_id())
+        .withColumn("updated_at", now)
+        .select(*existing.columns)
+    )
+    # the column order the Spark path's key joins write
+    rest = [c for c in existing.columns if c not in NATURAL_KEY]
+    return merged.select(*NATURAL_KEY, *rest), stats, ids
+
+
+def _batch_stats(
+    incoming: DataFrame, flagged: DataFrame, gone: DataFrame
+) -> dict:
+    """processed / inserted / updated / deleted in one aggregate: the
+    batch's rows, its upserted keys (``_had`` null for a new key) and
+    the stored rows its tombstones remove."""
+    kind = F.col("_kind")
+    row = (
+        incoming.select(F.lit("processed").alias("_kind"))
+        .unionByName(
+            flagged.select(
+                F.when(F.col("_had").isNull(), "inserted")
+                .otherwise("updated")
+                .alias("_kind")
+            )
+        )
+        .unionByName(gone.select(F.lit("deleted").alias("_kind")))
+        .agg(
+            *[
+                F.count_if(kind == k).alias(k)
+                for k in ("processed", "inserted", "updated", "deleted")
+            ]
+        )
+        .first()
+    )
+    return row.asDict()
 
 
 def recluster_pools(
@@ -255,9 +362,17 @@ def recluster_pools(
     batch records alone and CC runs over the components the batch can
     reach; everything else keeps its assignment (provably identical to
     a full recompute: min-label depends only on a component's member
-    set, and unaffected components keep theirs). Without it, the full
+    set, and unaffected components keep theirs). That subgraph is
+    collected to the driver and solved there (``_local_delta``) unless
+    it holds more than ``DRIVER_CC_MAX_EDGES`` rows; then the same
+    closure runs as Spark joins. Without ``batch_ids``, the full
     rebuild runs (`initialize_pool`)."""
     now = now if now is not None else F.current_timestamp()
+    if batch_ids is not None:
+        delta = _local_delta(wh, records, configs, batch_ids)
+        if delta is not None:
+            _write_delta(wh, delta, now)
+            return
     pool_ids = [c["id"] for c in configs]
     all_ids = records.select("global_id").distinct()
     old_values = wh.read("record_match_values")
@@ -270,105 +385,324 @@ def recluster_pools(
     # on a real cluster) rather than localCheckpoint()ed; the versioned
     # Warehouse keeps pre-write snapshots readable, so nothing needs
     # eager materialization to survive the commits below
-    cached = []
+    with _held() as hold:
+        if batch_ids is None:
+            values = hold(
+                truncate_match_values(extract_match_values(records, configs))
+            )
+            clustered = cluster_all_pools(values, pool_ids)
+            # the reference assigns EVERY record a cluster per pool,
+            # including records whose matcher produced no values
+            # (singleton cluster, empty matchValues — Storage.java:
+            # 441-484); CC only covers records with edges, so add the
+            # valueless records as self-clusters
+            singletons = (
+                all_ids.select("global_id", _pools(pool_ids))
+                .join(
+                    values.select(
+                        "global_id", "match_key_config_id"
+                    ).distinct(),
+                    ["global_id", "match_key_config_id"],
+                    "left_anti",
+                )
+                .withColumn("cluster_id", F.col("global_id"))
+            )
+            assignments = hold(clustered.unionByName(singletons))
+            changed = changed_clusters(old_pool_assign, assignments)
+        else:
+            # incremental: re-extract values for the batch only
+            new_vals = truncate_match_values(
+                extract_match_values(
+                    records.join(batch_ids, "global_id", "left_semi"),
+                    configs,
+                )
+            )
+            kept_vals = old_values.filter(
+                F.col("match_key_config_id").isin(pool_ids)
+            ).join(batch_ids, "global_id", "left_anti")
+            values = hold(
+                kept_vals.unionByName(new_vals.select(*kept_vals.columns))
+            )
 
-    def _cache(df: DataFrame) -> DataFrame:
-        cached.append(df.persist())
-        return df
-
-    if batch_ids is None:
-        values = _cache(
-            truncate_match_values(extract_match_values(records, configs))
-        )
-        clustered = cluster_all_pools(values, pool_ids)
-        # the reference assigns EVERY record a cluster per pool, including
-        # records whose matcher produced no values (singleton cluster, empty
-        # matchValues — Storage.java:441-484); CC only covers records with
-        # edges, so add the valueless records as self-clusters
-        pools = F.explode(
-            F.array(*[F.lit(p) for p in pool_ids])
-        ).alias("match_key_config_id")
-        singletons = (
-            all_ids.select("global_id", pools)
-            .join(
-                values.select("global_id", "match_key_config_id").distinct(),
-                ["global_id", "match_key_config_id"],
-                "left_anti",
+            affected = hold(
+                affected_subgraph(
+                    values, old_assign, batch_ids, all_ids, pool_ids
+                )
             )
-            .withColumn("cluster_id", F.col("global_id"))
-        )
-        assignments = _cache(clustered.unionByName(singletons))
-        changed = changed_clusters(old_pool_assign, assignments)
-    else:
-        # incremental: re-extract values for the batch only
-        new_vals = truncate_match_values(
-            extract_match_values(
-                records.join(batch_ids, "global_id", "left_semi"), configs
-            )
-        )
-        kept_vals = old_values.filter(
-            F.col("match_key_config_id").isin(pool_ids)
-        ).join(batch_ids, "global_id", "left_anti")
-        values = _cache(
-            kept_vals.unionByName(new_vals.select(*kept_vals.columns))
-        )
-
-        affected = _cache(
-            affected_subgraph(values, old_assign, batch_ids, all_ids, pool_ids)
-        )
-        aff_values = values.join(
-            affected, ["global_id", "match_key_config_id"], "left_semi"
-        )
-        clustered_aff = cluster_all_pools(aff_values, pool_ids)
-        # affected-but-valueless records that still exist → self-clusters
-        # (the semi join excludes deleted batch ids, which must vanish)
-        singletons = (
-            affected.join(all_ids, "global_id", "left_semi")
-            .join(
-                aff_values.select(
-                    "global_id", "match_key_config_id"
-                ).distinct(),
-                ["global_id", "match_key_config_id"],
-                "left_anti",
-            )
-            .withColumn("cluster_id", F.col("global_id"))
-        )
-        new_aff = _cache(
-            clustered_aff.unionByName(
-                singletons.select(*clustered_aff.columns)
-            )
-        )
-        changed = changed_clusters(
-            old_pool_assign.join(
+            aff_values = values.join(
                 affected, ["global_id", "match_key_config_id"], "left_semi"
-            ),
-            new_aff,
+            )
+            clustered_aff = cluster_all_pools(aff_values, pool_ids)
+            # affected-but-valueless records that still exist →
+            # self-clusters (the semi join excludes deleted batch ids,
+            # which must vanish)
+            singletons = (
+                affected.join(all_ids, "global_id", "left_semi")
+                .join(
+                    aff_values.select(
+                        "global_id", "match_key_config_id"
+                    ).distinct(),
+                    ["global_id", "match_key_config_id"],
+                    "left_anti",
+                )
+                .withColumn("cluster_id", F.col("global_id"))
+            )
+            new_aff = hold(
+                clustered_aff.unionByName(
+                    singletons.select(*clustered_aff.columns)
+                )
+            )
+            changed = changed_clusters(
+                old_pool_assign.join(
+                    affected,
+                    ["global_id", "match_key_config_id"],
+                    "left_semi",
+                ),
+                new_aff,
+            )
+            assignments = hold(
+                old_pool_assign.join(
+                    affected,
+                    ["global_id", "match_key_config_id"],
+                    "left_anti",
+                ).unionByName(new_aff)
+            )
+
+        keep_values = old_values.filter(
+            ~F.col("match_key_config_id").isin(pool_ids)
         )
-        assignments = _cache(
-            old_pool_assign.join(
-                affected, ["global_id", "match_key_config_id"], "left_anti"
-            ).unionByName(new_aff)
+        wh.write(
+            "record_match_values",
+            keep_values.unionByName(values.select(*keep_values.columns)),
         )
 
-    keep_values = old_values.filter(~F.col("match_key_config_id").isin(pool_ids))
+        keep_assign = old_assign.filter(
+            ~F.col("match_key_config_id").isin(pool_ids)
+        )
+        wh.write(
+            "cluster_assignments", keep_assign.unionByName(assignments)
+        )
+
+        old_meta = wh.read("cluster_meta")
+        old_pool_meta = old_meta.filter(
+            F.col("match_key_config_id").isin(pool_ids)
+        )
+        new_meta = advance_meta(old_pool_meta, assignments, changed, now)
+        keep_meta = old_meta.filter(
+            ~F.col("match_key_config_id").isin(pool_ids)
+        )
+        wh.write("cluster_meta", keep_meta.unionByName(new_meta))
+
+
+def _pools(pool_ids: list[str]) -> Column:
+    """One row per pool: explode this over a record frame."""
+    return F.explode(F.array(*[F.lit(p) for p in pool_ids])).alias(
+        "match_key_config_id"
+    )
+
+
+class _Delta(NamedTuple):
+    """A batch's re-clustering, computed on the driver: the rows that
+    replace the pools' rows of the affected records."""
+
+    pool_ids: list[str]
+    batch: set  # batch global ids; their values in the pools are replaced
+    values: list  # (global_id, pool, match_value) of the live batch records
+    affected: set  # (global_id, pool) whose assignment is replaced
+    assignments: list  # (global_id, pool, cluster_id) of the live affected
+    changed_live: set  # (pool, cluster_id): changed and has members
+    changed_gone: set  # (pool, cluster_id): changed and now empty
+
+
+class _TooBig(Exception):
+    """The affected subgraph is over the driver bound."""
+
+
+_SEP = "\x1f"  # cannot occur in pool or record ids
+
+
+def _key(*cols: str) -> Column:
+    return F.concat_ws(_SEP, *cols)
+
+
+def _key_strs(keys) -> list[str]:
+    """The `_key` strings of key tuples, sorted, for `isin`."""
+    return sorted(_SEP.join(str(v) for v in k) for k in keys)
+
+
+def _local_frame(wh: Warehouse, rows: list, schema) -> DataFrame:
+    """A one-partition frame of driver-side rows."""
+    sc = wh.spark.sparkContext
+    return wh.spark.createDataFrame(sc.parallelize(rows, 1), schema)
+
+
+def _local_delta(
+    wh: Warehouse, records: DataFrame, configs: list[dict], batch_ids: DataFrame
+) -> _Delta | None:
+    """Collect the batch's affected subgraph (the closure documented in
+    `affected_subgraph`) in a few filtered scans and re-cluster it with
+    the union-find `connected_components` uses for small graphs. Each
+    collect holds at most ``DRIVER_CC_MAX_EDGES`` rows, and so does the
+    edge list; past that, None (the caller runs the Spark path)."""
+    limit = clustering.DRIVER_CC_MAX_EDGES
+    pool_ids = [c["id"] for c in configs]
+    pool = F.col("match_key_config_id")
+    gid = F.col("global_id")
+
+    def bounded(df: DataFrame) -> list:
+        rows = df.limit(limit + 1).collect()
+        if len(rows) > limit:
+            raise _TooBig
+        return rows
+
+    old_values = wh.read("record_match_values").filter(pool.isin(pool_ids))
+    old_assign = wh.read("cluster_assignments").filter(pool.isin(pool_ids))
+    try:
+        batch = {r[0] for r in bounded(batch_ids.select("global_id"))}
+        # the live batch records' new values, and a null-pool marker
+        # row per live batch record (deleted ones have neither); these
+        # rows grow with the batch's payloads, not with the warehouse
+        recs = records.filter(gid.isin(sorted(batch)))
+        rows = (
+            truncate_match_values(extract_match_values(recs, configs))
+            .unionByName(
+                recs.select(
+                    "global_id",
+                    F.lit(None).cast("string").alias("match_key_config_id"),
+                    F.lit(None).cast("string").alias("match_value"),
+                )
+            )
+            .collect()
+        )
+        live_batch = {r[0] for r in rows if r[1] is None}
+        values = [tuple(r) for r in rows if r[1] is not None]
+
+        # seeds: the batch records, and records sharing a new value
+        seeds = {(g, p) for g in batch for p in pool_ids}
+        batch_vals = {(p, v) for _, p, v in values}
+        if batch_vals:
+            for g, p, v in bounded(
+                old_values.filter(
+                    F.col("match_value").isin(sorted({v for _, v in batch_vals}))
+                    & ~gid.isin(sorted(batch))
+                ).select("global_id", "match_key_config_id", "match_value")
+            ):
+                if (p, v) in batch_vals:
+                    seeds.add((g, p))
+        # every member of the seeds' old clusters, with its old cluster
+        # (a seed has at most one assignment row)
+        seed_clusters = {
+            tuple(r)
+            for r in old_assign.filter(
+                _key("match_key_config_id", "global_id").isin(
+                    _key_strs((p, g) for g, p in seeds)
+                )
+            )
+            .select("match_key_config_id", "cluster_id")
+            .collect()
+        }
+        old = {}
+        if seed_clusters:
+            for g, p, c in bounded(
+                old_assign.filter(
+                    _key("match_key_config_id", "cluster_id").isin(
+                        _key_strs(seed_clusters)
+                    )
+                ).select("global_id", "match_key_config_id", "cluster_id")
+            ):
+                old[(g, p)] = c
+        # records with no assignment in a pool yet
+        unassigned = bounded(
+            records.select("global_id", _pools(pool_ids)).join(
+                old_assign, ["global_id", "match_key_config_id"], "left_anti"
+            )
+        )
+        affected = seeds | old.keys() | {tuple(r) for r in unassigned}
+
+        # edges: the batch's new values, the others' stored ones
+        edges = [((p, g), (p, v)) for g, p, v in values]
+        others = _key_strs((p, g) for g, p in affected if g not in batch)
+        if others:
+            edges += [
+                ((p, g), (p, v))
+                for g, p, v in bounded(
+                    old_values.filter(
+                        _key("match_key_config_id", "global_id").isin(others)
+                    ).select("global_id", "match_key_config_id", "match_value")
+                )
+            ]
+        if len(edges) > limit:
+            raise _TooBig
+    except _TooBig:
+        return None
+
+    # min-label components per pool: nodes and values carry their pool
+    label = dict(_driver_components(edges))
+    _record_driver_run(len(edges))
+    new = {
+        (g, p): label[(p, g)][1] if (p, g) in label else g
+        for g, p in affected
+        if g not in batch or g in live_batch
+    }
+    changed = set()
+    for g, p in affected:
+        o, n = old.get((g, p)), new.get((g, p))
+        if o != n:
+            changed.update((p, c) for c in (o, n) if c is not None)
+    live = {(p, c) for (_, p), c in new.items()}
+    return _Delta(
+        pool_ids=pool_ids,
+        batch=batch,
+        values=values,
+        affected=affected,
+        assignments=[(g, p, c) for (g, p), c in new.items()],
+        changed_live=changed & live,
+        changed_gone=changed - live,
+    )
+
+
+def _write_delta(wh: Warehouse, d: _Delta, now: Column) -> None:
+    """Write each pool table as its stored snapshot minus the affected
+    keys, plus the delta's rows. A changed cluster's meta row gets
+    ``now``; one that lost all members keeps its row (OAI lists it as
+    deleted), as `advance_meta` does."""
+
+    pool = F.col("match_key_config_id")
+    old = wh.read("record_match_values")
     wh.write(
         "record_match_values",
-        keep_values.unionByName(values.select(*keep_values.columns)),
+        old.filter(
+            ~(pool.isin(d.pool_ids) & F.col("global_id").isin(sorted(d.batch)))
+        ).unionByName(_local_frame(wh, d.values, RECORD_MATCH_VALUES_SCHEMA)),
     )
-
-    keep_assign = old_assign.filter(~F.col("match_key_config_id").isin(pool_ids))
+    old = wh.read("cluster_assignments")
     wh.write(
-        "cluster_assignments", keep_assign.unionByName(assignments)
+        "cluster_assignments",
+        old.filter(
+            ~_key("match_key_config_id", "global_id").isin(
+                _key_strs((p, g) for g, p in d.affected)
+            )
+        ).unionByName(
+            _local_frame(wh, d.assignments, CLUSTER_ASSIGNMENTS_SCHEMA)
+        ),
     )
-
-    old_meta = wh.read("cluster_meta")
-    old_pool_meta = old_meta.filter(F.col("match_key_config_id").isin(pool_ids))
-    new_meta = advance_meta(old_pool_meta, assignments, changed, now)
-    keep_meta = old_meta.filter(~F.col("match_key_config_id").isin(pool_ids))
-    wh.write("cluster_meta", keep_meta.unionByName(new_meta))
-
-    for df in cached:
-        df.unpersist()
+    old = wh.read("cluster_meta")
+    key = _key("match_key_config_id", "cluster_id")
+    live = _local_frame(
+        wh,
+        [(c, p) for p, c in d.changed_live],
+        "cluster_id string, match_key_config_id string",
+    )
+    wh.write(
+        "cluster_meta",
+        old.filter(~key.isin(_key_strs(d.changed_live | d.changed_gone)))
+        .unionByName(
+            old.filter(key.isin(_key_strs(d.changed_gone))).withColumn(
+                "datestamp", now
+            )
+        )
+        .unionByName(live.withColumn("datestamp", now)),
+    )
 
 
 def initialize_pool(wh: Warehouse, config: dict, now=None) -> None:

@@ -388,57 +388,117 @@ def test_manual_pool_untouched_at_ingest(spark, warehouse):
     assert man.select("cluster_id").distinct().count() == 1
 
 
-def test_incremental_recluster_equals_full_rebuild(spark, warehouse):
-    """ingest_batch re-clusters only the affected subgraph; after
-    merges, an update that splits a chain, and a tombstone, the
-    assignments (including cluster ids) must equal a full rebuild."""
-
-    def batch(rows):
-        return spark.createDataFrame(
-            rows,
-            "local_id string, source_id string, source_version int, "
-            "payload string, delete boolean",
-        )
-
-    ingest_batch(
-        warehouse,
-        batch(
-            [
-                ("A", "S", 1, payload(issn=["1"]), None),
-                ("B", "S", 1, payload(issn=["1"]), None),
-                ("C", "S", 1, payload(issn=["2"]), None),
-                ("D", "S", 1, payload(issn=["2", "3"]), None),
-                ("E", "S", 1, payload(issn=["3"]), None),
-                ("F", "S", 1, payload(), None),
-            ]
-        ),
-        [ISSN_CFG],
+def _batch(spark, rows):
+    return spark.createDataFrame(
+        rows,
+        "local_id string, source_id string, source_version int, "
+        "payload string, delete boolean",
     )
+
+
+# a warehouse built, then merged, split and tombstoned by three batches
+INCREMENTAL_BATCHES = [
+    [
+        ("A", "S", 1, payload(issn=["1"]), None),
+        ("B", "S", 1, payload(issn=["1"]), None),
+        ("C", "S", 1, payload(issn=["2"]), None),
+        ("D", "S", 1, payload(issn=["2", "3"]), None),
+        ("E", "S", 1, payload(issn=["3"]), None),
+        ("F", "S", 1, payload(), None),
+    ],
     # D gains a v2 with issn 4 (old version's values persist — global
     # ids are per (local, source, version)); G joins {A,B}
-    ingest_batch(
-        warehouse,
-        batch(
-            [
-                ("D", "S", 2, payload(issn=["4"]), None),
-                ("G", "S", 1, payload(issn=["1"]), None),
-            ]
-        ),
-        [ISSN_CFG],
-    )
+    [
+        ("D", "S", 2, payload(issn=["4"]), None),
+        ("G", "S", 1, payload(issn=["1"]), None),
+    ],
     # tombstone B (removes every version); X bridges issn 2 and 4 —
     # merging {C,D1,E} with {D2}: the far member E must relabel even
     # though it shares no value with the batch (full-cluster closure)
-    ingest_batch(
-        warehouse,
-        batch(
-            [
-                ("B", "S", 2, None, True),
-                ("X", "S", 1, payload(issn=["2", "4"]), None),
-            ]
-        ),
-        [ISSN_CFG],
-    )
+    [
+        ("B", "S", 2, None, True),
+        ("X", "S", 1, payload(issn=["2", "4"]), None),
+    ],
+]
+
+
+def _ingest_incremental_batches(spark, warehouse):
+    """Run INCREMENTAL_BATCHES with one fixed ``now`` per batch and
+    check each batch's datestamps: exactly the changed clusters get
+    the batch's ``now``, every other meta row keeps its datestamp, and
+    a cluster that lost all its members keeps its row."""
+    import datetime as dt
+
+    def snapshot():
+        assigned = {
+            r.global_id: r.cluster_id
+            for r in warehouse.read("cluster_assignments").collect()
+        }
+        meta = {
+            r.cluster_id: r.datestamp
+            for r in warehouse.read("cluster_meta").collect()
+        }
+        return assigned, meta
+
+    vanished_seen = False
+    stats = []
+    for i, rows in enumerate(INCREMENTAL_BATCHES):
+        now = dt.datetime(2024, 1, 1 + i)
+        old, old_meta = snapshot()
+        stats.append(
+            ingest_batch(
+                warehouse, _batch(spark, rows), [ISSN_CFG], now=F.lit(now)
+            )
+        )
+        new, meta = snapshot()
+        changed = {
+            c
+            for g in old.keys() | new.keys()
+            if old.get(g) != new.get(g)
+            for c in (old.get(g), new.get(g))
+            if c is not None
+        }
+        assert changed
+        assert {c for c, d in meta.items() if d == now} == changed
+        assert all(meta[c] == d for c, d in old_meta.items() if c not in changed)
+        vanished = set(old.values()) - set(new.values())
+        assert vanished <= meta.keys()
+        vanished_seen |= bool(vanished)
+    assert vanished_seen
+    return stats
+
+
+def test_incremental_recluster_equals_full_rebuild(
+    spark, warehouse, tmp_path, monkeypatch
+):
+    """ingest_batch re-clusters only the affected subgraph; after
+    merges, an update that splits a chain, and a tombstone, the
+    assignments (including cluster ids) must equal a full rebuild.
+    The batches take the driver path; forced onto the Spark path
+    (``DRIVER_CC_MAX_EDGES = 0``), the same batches must leave the
+    four tables equal row for row."""
+    from mod_reservoir_spark.core.storage import Warehouse
+    from mod_reservoir_spark.operators import clustering as cc
+
+    stats = _ingest_incremental_batches(spark, warehouse)
+    assert cc.LAST_RUN_STATS["path"] == "driver"
+    assert stats[2] == {
+        "processed": 2, "inserted": 1, "updated": 0, "deleted": 1
+    }
+    spark_path = Warehouse(spark, str(tmp_path / "spark_path"))
+    with monkeypatch.context() as m:
+        m.setattr(cc, "DRIVER_CC_MAX_EDGES", 0)
+        assert _ingest_incremental_batches(spark, spark_path) == stats
+        assert "path" not in cc.LAST_RUN_STATS
+    for table in (
+        "global_records",
+        "record_match_values",
+        "cluster_assignments",
+        "cluster_meta",
+    ):
+        assert sorted(warehouse.read(table).collect()) == sorted(
+            spark_path.read(table).collect()
+        ), table
 
     recs = warehouse.read("global_records")
     incr = warehouse.read("cluster_assignments")
@@ -458,6 +518,51 @@ def test_incremental_recluster_equals_full_rebuild(spark, warehouse):
         for r in warehouse.read("cluster_assignments").collect()
     }
     assert incr_rows == full_rows
+
+
+@pytest.mark.parametrize("driver_max_edges", [None, 0])
+def test_ingest_releases_frames_when_a_matcher_raises(
+    spark, warehouse, monkeypatch, driver_max_edges
+):
+    """A matcher that raises mid-batch fails the batch and leaves no
+    RDD persisted, on the driver path and on the Spark path."""
+    from mod_reservoir_spark.operators import clustering as cc
+    from mod_reservoir_spark.operators.matchkeys import register_module
+
+    def boom(_record):
+        raise ValueError("matcher failure")
+
+    register_module("test-boom", boom)
+    if driver_max_edges is not None:
+        monkeypatch.setattr(cc, "DRIVER_CC_MAX_EDGES", driver_max_edges)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    with pytest.raises(Exception, match="matcher failure"):
+        ingest_batch(
+            warehouse,
+            _batch(spark, INCREMENTAL_BATCHES[0]),
+            [ISSN_CFG, {"id": "boom", "matcher": "test-boom", "update": "ingest"}],
+        )
+    assert set(jsc.getPersistentRDDs().keys()) <= before
+
+
+def test_one_record_batch_job_count(spark, warehouse):
+    """A one-record batch into a small warehouse runs at most 30 Spark
+    jobs: the affected subgraph is collected once, not re-planned."""
+    _ingest_incremental_batches(spark, warehouse)
+    sc = spark.sparkContext
+    group = "test-one-record-batch"
+    sc.setJobGroup(group, "one-record ingest batch")
+    try:
+        ingest_batch(
+            warehouse,
+            _batch(spark, [("Y", "S", 1, payload(issn=["1", "9"]), None)]),
+            [ISSN_CFG],
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 30, len(jobs)
 
 
 def test_warehouse_versioned_atomic_commits(spark, tmp_path):

@@ -21,7 +21,8 @@ from tests.test_inventory import SYNTH_999, fixture_records, inventory_xml_to_js
 UUIDS_DIR = "/root/reference/xsl/uuids"
 RES = "/root/reference/util/src/test/resources"
 
-pytestmark = pytest.mark.skipif(
+# carried by the tests that open reference files; the rest run anywhere
+needs_reference = pytest.mark.skipif(
     not os.path.exists(f"{UUIDS_DIR}/marc2inventory-instance.xsl"),
     reason="reference uuids stylesheets not present",
 )
@@ -133,6 +134,7 @@ def uuids_chain_oracle(spark, xml: str) -> dict:
     return inventory_xml_to_json(ET.fromstring(out))["record"]
 
 
+@needs_reference
 def test_uuids_chain_matches_real_stylesheets(spark):
     fixtures = fixture_records()
     assert len(fixtures) == 10
@@ -145,6 +147,7 @@ def test_uuids_chain_matches_real_stylesheets(spark):
     assert not mismatches, mismatches[:1]
 
 
+@needs_reference
 def test_uuids_chain_999_locations(spark):
     """Real location codes dereference to their UUIDs, unknown codes
     to the Unmapped UUID; the $preloc quirk and item grouping match
@@ -172,6 +175,7 @@ def test_uuids_chain_999_locations(spark):
     assert got["institutionId"] == "a1decabf-302e-5e4f-9bbe-f11cbcde7296"
 
 
+@needs_reference
 def test_uuids_chain_no_999_unmapped(spark):
     xml = SYNTH_999.split("<datafield")[0] + "</record>"
     marc = list(parse_marcxml(xml.encode()))[0]
@@ -198,6 +202,7 @@ _LEADER_TMPL = """<record xmlns="http://www.loc.gov/MARC21/slim">
     "mt,bl",
     [(m, "m") for m in "acdefgijkmoprtz"] + [("a", "s"), ("a", "b")],
 )
+@needs_reference
 def test_uuids_instance_and_material_type_sweep(spark, mt, bl):
     """Every leader[6]/leader[7] branch of the instanceTypeId and
     materialTypeId chooses matches the real stylesheets."""
@@ -233,12 +238,14 @@ _RELATOR_TMPL = """<record xmlns="http://www.loc.gov/MARC21/slim">
         '<subfield code="e"></subfield>',  # empty value
     ],
 )
+@needs_reference
 def test_uuids_relator_mapping_matches_stylesheet(spark, subfields):
     xml = _RELATOR_TMPL.format(subfields=subfields)
     marc = list(parse_marcxml(xml.encode()))[0]
     assert cst_uuids_inventory(marc) == uuids_chain_oracle(spark, xml)
 
 
+@needs_reference
 def test_uuids_identifier_and_note_types(spark):
     """All identifier-type, classification and note-type UUID branches
     against the real stylesheet, incl. the malformed 520 note id
@@ -285,6 +292,7 @@ def test_map_relator_unit():
     assert map_relator({"subfields": [{"e": "zzz"}]}) == RELATOR_DEFAULT
 
 
+@needs_reference
 def test_uuids_ingest_spark_path(spark):
     """with_inventory='cst-uuids' populates UUID-profile inventory
     end-to-end through the Arrow-batched decode."""

@@ -14,7 +14,8 @@ from mod_reservoir_spark.sources.marcxml import fix_xml_bytes, parse_marcxml
 RES = "/root/reference/util/src/test/resources"
 SRES = "/root/reference/server/src/test/resources"
 
-pytestmark = pytest.mark.skipif(
+# carried by the tests that open reference files; the rest run anywhere
+needs_reference = pytest.mark.skipif(
     not os.path.isdir(RES), reason="reference fixtures not present"
 )
 
@@ -23,6 +24,7 @@ def read(p):
     return open(p, "rb").read()
 
 
+@needs_reference
 def test_iso2709_marc3_roundtrip_vs_xml():
     """ISO2709 and MARCXML decodes of the same records agree byte-exact.
 
@@ -38,6 +40,7 @@ def test_iso2709_marc3_roundtrip_vs_xml():
         assert a["fields"] == b["fields"]
 
 
+@needs_reference
 def test_iso2709_framing_tolerates_junk():
     data = read(f"{RES}/marc3.marc")
     recs = list(parse_iso2709(data))
@@ -49,6 +52,7 @@ def test_iso2709_framing_tolerates_junk():
     assert len(list(parse_iso2709(junky))) == len(recs)
 
 
+@needs_reference
 def test_marcxml_record10():
     recs = list(parse_marcxml(read(f"{RES}/record10.xml")))
     assert len(recs) == 10
@@ -56,6 +60,7 @@ def test_marcxml_record10():
         assert "leader" in r and r["fields"]
 
 
+@needs_reference
 def test_delete_tombstone_marker():
     # the fixture deliberately contains an invalid character reference
     # → exercises the XmlFixer path (reference XmlFixerMapper)
@@ -64,12 +69,14 @@ def test_delete_tombstone_marker():
     assert any(i["delete"] for i in ingest)
 
 
+@needs_reference
 def test_no_id_record_has_no_local_id():
     recs = list(parse_marcxml(read(f"{SRES}/marc3-no-id.xml")))
     ingest = list(group_ingest_records(recs))
     assert any(i["localId"] is None for i in ingest)
 
 
+@needs_reference
 def test_holdings_grouping_mfhd():
     recs = list(parse_iso2709(read(f"{RES}/mfhd.marc")))
     ingest = list(group_ingest_records(recs))
@@ -79,6 +86,7 @@ def test_holdings_grouping_mfhd():
         assert "marc" in i["payload"]
 
 
+@needs_reference
 def test_holdings_without_parent_skipped_or_strict():
     recs = list(parse_iso2709(read(f"{RES}/mfhd-no-parent.marc")))
     assert list(group_ingest_records(recs, strict=False)) is not None
@@ -93,12 +101,14 @@ def test_holdings_without_parent_skipped_or_strict():
             list(group_ingest_records(recs, strict=True))
 
 
+@needs_reference
 def test_xml_fixer_bad_entities():
     fixed = fix_xml_bytes(read(f"{RES}/small-bad-entities.xml"))
     recs = list(parse_marcxml(fixed))
     assert isinstance(recs, list)
 
 
+@needs_reference
 def test_json_envelope_records_in():
     ingest = list(parse_envelope(read(f"{RES}/records-in.json")))
     assert ingest
@@ -108,6 +118,7 @@ def test_json_envelope_records_in():
     assert "marc" in payload and payload["marc"]["fields"]
 
 
+@needs_reference
 def test_spark_end_to_end_marcxml_ingest(spark, warehouse):
     """record10.xml → read_marcxml → ingest mapper → ingest_batch →
     10 records in the warehouse, each its own goldrush-less pool."""
@@ -134,6 +145,7 @@ def test_spark_end_to_end_marcxml_ingest(spark, warehouse):
     )
 
 
+@needs_reference
 def test_gzip_input(spark, tmp_path):
     import gzip
 
