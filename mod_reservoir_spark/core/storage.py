@@ -156,6 +156,12 @@ def upsert_records(
     window over ingest order).
 
     Returns (new snapshot, {"inserted": n, "updated": n}).
+
+    Ingest does not call it: ``ingest_batch`` runs `_upsert` and folds
+    these counts into its own batch stats, or upserts a small batch on
+    the driver. It stays the one-call upsert, and the name the
+    benchmark's ``storage.upsert`` span wraps, which therefore reads 0
+    for every ingest batch.
     """
     merged, flagged = _upsert(existing, incoming, now)
     row = flagged.agg(

@@ -67,11 +67,13 @@ LAST_RUN_STATS: dict = {}
 # small relative to their corpus by construction (seconds per funnel
 # run at bench scale, guide §1.2 "don't pay shuffles the data doesn't
 # need"). The gate is one bounded collect of at most max + 1 edge
-# rows — at 100 TB a billion-edge graph stays on the iterative path
-# untouched (the MAX_BROADCAST_QUERIES cutover pattern). 100k edge
-# rows collect to ~10 MB — far under any driver limit. Incremental
-# re-clustering (streaming/ingest.py) uses the same bound for the
-# affected subgraph it collects.
+# rows, so a small graph costs one action; a larger one then runs the
+# iterative path (the MAX_BROADCAST_QUERIES cutover pattern), which
+# computes the edge plan once more for its persist + count — one extra
+# pass (with the dedupe shuffle) in front of several iterations over
+# the same edges. 100k edge rows collect to ~10 MB — far under any
+# driver limit. Incremental re-clustering (streaming/ingest.py) uses
+# the same bound for the affected subgraph it collects.
 DRIVER_CC_MAX_EDGES = 100_000
 
 

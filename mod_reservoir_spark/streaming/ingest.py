@@ -16,17 +16,28 @@ collected once: the upsert, the stats, CC, the changed clusters and the
 meta delta are computed on the driver, and each table is written as
 one scan of its stored snapshot minus the affected keys plus the local
 rows — a small batch costs a few dozen Spark jobs whatever the
-warehouse size, and no frame is cached on top of another. Above the
-bound, the same steps run as Spark joins over the affected subgraph
-only (CC iterations never touch unaffected components).
+warehouse size, and no frame is cached on top of another. Key sets
+enter a plan as an `isin` list up to ``_ISIN_MAX_KEYS`` keys and as a
+broadcast local frame above, so no plan grows with the batch. Above
+the bound, the same steps run as Spark joins over the affected
+subgraph only (CC iterations never touch unaffected components).
 `initialize_pool` remains the full rebuild (new/changed configs).
+
+Replay: the tables are committed one at a time (global_records,
+record_match_values, cluster_meta, cluster_assignments), and a batch
+replayed after a crash between two commits leaves the tables a clean
+run leaves: the cluster delta is recomputed from the assignments that
+were not yet replaced, and records the batch deleted, which
+global_records no longer holds, are found again as assignments
+without a record.
 """
 
 from __future__ import annotations
 
 from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from mod_reservoir_spark.core.model import (
     CLUSTER_ASSIGNMENTS_SCHEMA,
@@ -206,7 +217,7 @@ def ingest_batch(
         if local is not None:
             merged, stats, ids = local
             batch_ids = _local_frame(
-                wh, [(g,) for g in sorted(ids)], "global_id string"
+                wh.spark, [(g,) for g in sorted(ids)], "global_id string"
             )
         else:
             tombstones = (
@@ -280,9 +291,12 @@ def _local_upsert(
         return None
     pairs = {(r.local_id, r.source_id) for r in rows}
     stored = (
-        existing.filter(
-            F.col("source_id").isin(sorted({s for _, s in pairs}))
-            & _key("local_id", "source_id").isin(_key_strs(pairs))
+        _where(
+            existing.filter(
+                F.col("source_id").isin(sorted({s for _, s in pairs}))
+            ),
+            ["local_id", "source_id"],
+            pairs,
         )
         .select("global_id", *NATURAL_KEY)
         .limit(limit + 1)
@@ -305,11 +319,13 @@ def _local_upsert(
     live = [r for k, r in kept.items() if k[:2] not in tombs]
     ids = {r.global_id for r in stored} | {r.global_id for r in live}
 
-    merged = existing.filter(
-        ~_key(*NATURAL_KEY).isin(_key_strs(kept))
-        & ~_key("local_id", "source_id").isin(_key_strs(tombs))
+    merged = _where(
+        _where(existing, NATURAL_KEY, kept, keep=False),
+        ["local_id", "source_id"],
+        tombs,
+        keep=False,
     ).unionByName(
-        incoming.filter(F.col("_ord").isin(sorted(r._ord for r in live)))
+        _where(incoming, ["_ord"], [r._ord for r in live])
         .withColumn("global_id", deterministic_global_id())
         .withColumn("updated_at", now)
         .select(*existing.columns)
@@ -410,6 +426,15 @@ def recluster_pools(
             assignments = hold(clustered.unionByName(singletons))
             changed = changed_clusters(old_pool_assign, assignments)
         else:
+            # assignments whose record is gone are deleted batch
+            # records (see `_local_delta`)
+            batch_ids = hold(
+                batch_ids.unionByName(
+                    old_pool_assign.select("global_id").join(
+                        all_ids, "global_id", "left_anti"
+                    )
+                ).distinct()
+            )
             # incremental: re-extract values for the batch only
             new_vals = truncate_match_values(
                 extract_match_values(
@@ -476,13 +501,9 @@ def recluster_pools(
             keep_values.unionByName(values.select(*keep_values.columns)),
         )
 
-        keep_assign = old_assign.filter(
-            ~F.col("match_key_config_id").isin(pool_ids)
-        )
-        wh.write(
-            "cluster_assignments", keep_assign.unionByName(assignments)
-        )
-
+        # meta before assignments: a batch replayed after a crash
+        # between the two commits still finds its changes in the old
+        # assignments, so it bumps and adds the same meta rows again
         old_meta = wh.read("cluster_meta")
         old_pool_meta = old_meta.filter(
             F.col("match_key_config_id").isin(pool_ids)
@@ -492,6 +513,13 @@ def recluster_pools(
             ~F.col("match_key_config_id").isin(pool_ids)
         )
         wh.write("cluster_meta", keep_meta.unionByName(new_meta))
+
+        keep_assign = old_assign.filter(
+            ~F.col("match_key_config_id").isin(pool_ids)
+        )
+        wh.write(
+            "cluster_assignments", keep_assign.unionByName(assignments)
+        )
 
 
 def _pools(pool_ids: list[str]) -> Column:
@@ -520,20 +548,54 @@ class _TooBig(Exception):
 
 _SEP = "\x1f"  # cannot occur in pool or record ids
 
+# A key set of up to this many keys filters a plan as one `isin`
+# literal list; a larger one is a semi or anti join against a
+# broadcast local frame of the keys. The list costs ~0.4 ms a key to
+# build and plan (one py4j literal each) and ~43 bytes of plan; the
+# frame costs one more Spark job and a flat plan. Writing a 40k-row
+# table minus n (pool, record) keys, 4 cores, median of 3, list vs
+# frame: n=300 0.76 vs 0.90 s, 1000 0.91 vs 0.70 s, 3000 1.52 vs
+# 0.74 s, 10k 4.49 vs 0.86 s (430 KB of plan), 30k 12.2 vs 0.95 s.
+_ISIN_MAX_KEYS = 1_000
+# Driver rows per task of a `_local_frame`: 10k rows of match values
+# made 1.3-1.8 MB tasks, over Spark's 1 MB task-size warning.
+_LOCAL_ROWS_PER_TASK = 5_000
+
 
 def _key(*cols: str) -> Column:
     return F.concat_ws(_SEP, *cols)
 
 
-def _key_strs(keys) -> list[str]:
-    """The `_key` strings of key tuples, sorted, for `isin`."""
-    return sorted(_SEP.join(str(v) for v in k) for k in keys)
+def _where(
+    df: DataFrame, cols: list[str], keys, keep: bool = True
+) -> DataFrame:
+    """The rows of ``df`` whose ``cols`` are (``keep``) or are not one
+    of ``keys``: scalars for one column, tuples for several. Up to
+    ``_ISIN_MAX_KEYS`` keys this is an `isin` filter (several columns
+    through their `_key` string), above it a join with a broadcast
+    local frame of the keys, so the plan does not grow with them."""
+    keys = sorted(set(keys))
+    if len(keys) <= _ISIN_MAX_KEYS:
+        if len(cols) == 1:
+            hit = F.col(cols[0]).isin(keys)
+        else:
+            strs = [_SEP.join(str(v) for v in k) for k in keys]
+            hit = _key(*cols).isin(strs)
+        return df.filter(hit if keep else ~hit)
+    rows = keys if len(cols) > 1 else [(k,) for k in keys]
+    frame = _local_frame(
+        df.sparkSession, rows, StructType([df.schema[c] for c in cols])
+    )
+    how = "left_semi" if keep else "left_anti"
+    return df.join(F.broadcast(frame), cols, how).select(*df.columns)
 
 
-def _local_frame(wh: Warehouse, rows: list, schema) -> DataFrame:
-    """A one-partition frame of driver-side rows."""
-    sc = wh.spark.sparkContext
-    return wh.spark.createDataFrame(sc.parallelize(rows, 1), schema)
+def _local_frame(spark: SparkSession, rows: list, schema) -> DataFrame:
+    """A frame of driver-side rows, ``_LOCAL_ROWS_PER_TASK`` a task."""
+    slices = 1 + len(rows) // _LOCAL_ROWS_PER_TASK
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, slices), schema
+    )
 
 
 def _local_delta(
@@ -559,10 +621,29 @@ def _local_delta(
     old_assign = wh.read("cluster_assignments").filter(pool.isin(pool_ids))
     try:
         batch = {r[0] for r in bounded(batch_ids.select("global_id"))}
+        # records with no assignment in a pool yet, and assignments
+        # whose record is gone: a batch replayed after a crash past its
+        # global_records commit no longer finds the records it deleted,
+        # which the cluster tables still hold; they are deleted batch
+        # records again
+        loose = bounded(
+            records.select("global_id", _pools(pool_ids), F.lit(1).alias("_r"))
+            .join(
+                old_assign.select(
+                    "global_id", "match_key_config_id", F.lit(1).alias("_a")
+                ),
+                ["global_id", "match_key_config_id"],
+                "full_outer",
+            )
+            .filter(F.col("_r").isNull() | F.col("_a").isNull())
+            .select("global_id", "match_key_config_id", "_r")
+        )
+        unassigned = {(g, p) for g, p, r in loose if r is not None}
+        batch |= {g for g, _, r in loose if r is None}
         # the live batch records' new values, and a null-pool marker
         # row per live batch record (deleted ones have neither); these
         # rows grow with the batch's payloads, not with the warehouse
-        recs = records.filter(gid.isin(sorted(batch)))
+        recs = _where(records, ["global_id"], batch)
         rows = (
             truncate_match_values(extract_match_values(recs, configs))
             .unionByName(
@@ -582,9 +663,13 @@ def _local_delta(
         batch_vals = {(p, v) for _, p, v in values}
         if batch_vals:
             for g, p, v in bounded(
-                old_values.filter(
-                    F.col("match_value").isin(sorted({v for _, v in batch_vals}))
-                    & ~gid.isin(sorted(batch))
+                _where(
+                    _where(
+                        old_values, ["match_value"], {v for _, v in batch_vals}
+                    ),
+                    ["global_id"],
+                    batch,
+                    keep=False,
                 ).select("global_id", "match_key_config_id", "match_value")
             ):
                 if (p, v) in batch_vals:
@@ -593,10 +678,10 @@ def _local_delta(
         # (a seed has at most one assignment row)
         seed_clusters = {
             tuple(r)
-            for r in old_assign.filter(
-                _key("match_key_config_id", "global_id").isin(
-                    _key_strs((p, g) for g, p in seeds)
-                )
+            for r in _where(
+                old_assign,
+                ["match_key_config_id", "global_id"],
+                [(p, g) for g, p in seeds],
             )
             .select("match_key_config_id", "cluster_id")
             .collect()
@@ -604,30 +689,26 @@ def _local_delta(
         old = {}
         if seed_clusters:
             for g, p, c in bounded(
-                old_assign.filter(
-                    _key("match_key_config_id", "cluster_id").isin(
-                        _key_strs(seed_clusters)
-                    )
+                _where(
+                    old_assign,
+                    ["match_key_config_id", "cluster_id"],
+                    seed_clusters,
                 ).select("global_id", "match_key_config_id", "cluster_id")
             ):
                 old[(g, p)] = c
-        # records with no assignment in a pool yet
-        unassigned = bounded(
-            records.select("global_id", _pools(pool_ids)).join(
-                old_assign, ["global_id", "match_key_config_id"], "left_anti"
-            )
-        )
-        affected = seeds | old.keys() | {tuple(r) for r in unassigned}
+        affected = seeds | old.keys() | unassigned
 
         # edges: the batch's new values, the others' stored ones
         edges = [((p, g), (p, v)) for g, p, v in values]
-        others = _key_strs((p, g) for g, p in affected if g not in batch)
+        others = [(p, g) for g, p in affected if g not in batch]
         if others:
             edges += [
                 ((p, g), (p, v))
                 for g, p, v in bounded(
-                    old_values.filter(
-                        _key("match_key_config_id", "global_id").isin(others)
+                    _where(
+                        old_values,
+                        ["match_key_config_id", "global_id"],
+                        others,
                     ).select("global_id", "match_key_config_id", "match_value")
                 )
             ]
@@ -665,43 +746,48 @@ def _write_delta(wh: Warehouse, d: _Delta, now: Column) -> None:
     """Write each pool table as its stored snapshot minus the affected
     keys, plus the delta's rows. A changed cluster's meta row gets
     ``now``; one that lost all members keeps its row (OAI lists it as
-    deleted), as `advance_meta` does."""
+    deleted), as `advance_meta` does. ``cluster_meta`` is committed
+    before ``cluster_assignments``, as in `recluster_pools`."""
 
-    pool = F.col("match_key_config_id")
-    old = wh.read("record_match_values")
+    pool_gid = ["match_key_config_id", "global_id"]
+    pool_cluster = ["match_key_config_id", "cluster_id"]
     wh.write(
         "record_match_values",
-        old.filter(
-            ~(pool.isin(d.pool_ids) & F.col("global_id").isin(sorted(d.batch)))
-        ).unionByName(_local_frame(wh, d.values, RECORD_MATCH_VALUES_SCHEMA)),
-    )
-    old = wh.read("cluster_assignments")
-    wh.write(
-        "cluster_assignments",
-        old.filter(
-            ~_key("match_key_config_id", "global_id").isin(
-                _key_strs((p, g) for g, p in d.affected)
-            )
+        _where(
+            wh.read("record_match_values"),
+            pool_gid,
+            [(p, g) for p in d.pool_ids for g in d.batch],
+            keep=False,
         ).unionByName(
-            _local_frame(wh, d.assignments, CLUSTER_ASSIGNMENTS_SCHEMA)
+            _local_frame(wh.spark, d.values, RECORD_MATCH_VALUES_SCHEMA)
         ),
     )
     old = wh.read("cluster_meta")
-    key = _key("match_key_config_id", "cluster_id")
     live = _local_frame(
-        wh,
+        wh.spark,
         [(c, p) for p, c in d.changed_live],
         "cluster_id string, match_key_config_id string",
     )
     wh.write(
         "cluster_meta",
-        old.filter(~key.isin(_key_strs(d.changed_live | d.changed_gone)))
+        _where(old, pool_cluster, d.changed_live | d.changed_gone, keep=False)
         .unionByName(
-            old.filter(key.isin(_key_strs(d.changed_gone))).withColumn(
+            _where(old, pool_cluster, d.changed_gone).withColumn(
                 "datestamp", now
             )
         )
         .unionByName(live.withColumn("datestamp", now)),
+    )
+    wh.write(
+        "cluster_assignments",
+        _where(
+            wh.read("cluster_assignments"),
+            pool_gid,
+            [(p, g) for g, p in d.affected],
+            keep=False,
+        ).unionByName(
+            _local_frame(wh.spark, d.assignments, CLUSTER_ASSIGNMENTS_SCHEMA)
+        ),
     )
 
 

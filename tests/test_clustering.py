@@ -475,30 +475,41 @@ def test_incremental_recluster_equals_full_rebuild(
     merges, an update that splits a chain, and a tombstone, the
     assignments (including cluster ids) must equal a full rebuild.
     The batches take the driver path; forced onto the Spark path
-    (``DRIVER_CC_MAX_EDGES = 0``), the same batches must leave the
-    four tables equal row for row."""
+    (``DRIVER_CC_MAX_EDGES = 0``), or on the driver path with every
+    key set a broadcast frame and local rows split over tasks, the same
+    batches must leave the four tables equal row for row."""
     from mod_reservoir_spark.core.storage import Warehouse
     from mod_reservoir_spark.operators import clustering as cc
+    from mod_reservoir_spark.streaming import ingest as ingest_mod
 
     stats = _ingest_incremental_batches(spark, warehouse)
     assert cc.LAST_RUN_STATS["path"] == "driver"
     assert stats[2] == {
         "processed": 2, "inserted": 1, "updated": 0, "deleted": 1
     }
-    spark_path = Warehouse(spark, str(tmp_path / "spark_path"))
-    with monkeypatch.context() as m:
-        m.setattr(cc, "DRIVER_CC_MAX_EDGES", 0)
-        assert _ingest_incremental_batches(spark, spark_path) == stats
-        assert "path" not in cc.LAST_RUN_STATS
-    for table in (
-        "global_records",
-        "record_match_values",
-        "cluster_assignments",
-        "cluster_meta",
-    ):
-        assert sorted(warehouse.read(table).collect()) == sorted(
-            spark_path.read(table).collect()
-        ), table
+    variants = {
+        "spark_path": [(cc, "DRIVER_CC_MAX_EDGES", 0)],
+        "key_frames": [
+            (ingest_mod, "_ISIN_MAX_KEYS", 0),
+            (ingest_mod, "_LOCAL_ROWS_PER_TASK", 4),
+        ],
+    }
+    for name, patches in variants.items():
+        other = Warehouse(spark, str(tmp_path / name))
+        with monkeypatch.context() as m:
+            for module, attr, value in patches:
+                m.setattr(module, attr, value)
+            assert _ingest_incremental_batches(spark, other) == stats
+            assert ("path" in cc.LAST_RUN_STATS) == (name == "key_frames")
+        for table in (
+            "global_records",
+            "record_match_values",
+            "cluster_assignments",
+            "cluster_meta",
+        ):
+            assert sorted(warehouse.read(table).collect()) == sorted(
+                other.read(table).collect()
+            ), (name, table)
 
     recs = warehouse.read("global_records")
     incr = warehouse.read("cluster_assignments")
@@ -518,6 +529,72 @@ def test_incremental_recluster_equals_full_rebuild(
         for r in warehouse.read("cluster_assignments").collect()
     }
     assert incr_rows == full_rows
+
+
+def test_batch_replayed_after_a_crash_between_cluster_commits(
+    spark, warehouse, tmp_path, monkeypatch
+):
+    """Ingest is at-least-once: a batch that crashes before one of its
+    cluster table commits and is then replayed leaves the four tables
+    exactly as one clean run does (every live cluster has a meta row,
+    every changed one the batch's datestamp, the tombstoned record is
+    gone), on the driver path and on the Spark path
+    (``DRIVER_CC_MAX_EDGES = 0``)."""
+    import datetime as dt
+    import shutil
+
+    from mod_reservoir_spark.core.storage import Warehouse
+    from mod_reservoir_spark.operators import clustering as cc
+
+    tables = (
+        "global_records",
+        "record_match_values",
+        "cluster_meta",
+        "cluster_assignments",
+    )
+    last = len(INCREMENTAL_BATCHES) - 1
+
+    def run(wh, i):
+        ingest_batch(
+            wh,
+            _batch(spark, INCREMENTAL_BATCHES[i]),
+            [ISSN_CFG],
+            now=F.lit(dt.datetime(2024, 1, 1 + i)),
+        )
+
+    for i in range(last):
+        run(warehouse, i)
+    before = str(tmp_path / "before")
+    shutil.copytree(warehouse.root, before)
+    run(warehouse, last)
+    clean = {t: sorted(warehouse.read(t).collect()) for t in tables}
+
+    write = Warehouse.write
+    for max_edges, crash_at in (
+        (None, "cluster_meta"),
+        (None, "cluster_assignments"),
+        (0, "cluster_assignments"),
+    ):
+        wh = Warehouse(spark, str(tmp_path / f"{crash_at}-{max_edges}"))
+        shutil.copytree(before, wh.root)
+
+        def crashing(self, table, df, partition_by=None):
+            if table == crash_at:
+                raise RuntimeError("crash before commit")
+            return write(self, table, df, partition_by)
+
+        with monkeypatch.context() as m:
+            if max_edges is not None:
+                m.setattr(cc, "DRIVER_CC_MAX_EDGES", max_edges)
+            with monkeypatch.context() as crash:
+                crash.setattr(Warehouse, "write", crashing)
+                with pytest.raises(RuntimeError, match="crash before commit"):
+                    run(wh, last)
+            run(wh, last)
+        for t in tables:
+            assert sorted(wh.read(t).collect()) == clean[t], (
+                max_edges, crash_at, t,
+            )
 
 
 @pytest.mark.parametrize("driver_max_edges", [None, 0])
